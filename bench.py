@@ -26,29 +26,11 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-# Isolate this bench run's oracle_aux / bucketed tables from any
-# concurrently running gate/sweep/pytest process (VERDICT r13 task 4:
-# queries.py bakes the id at import; two processes sharing the default
-# dir race on overwrite and a random streaming query fails with "No
-# files found" — seen once in the r13 freeze sweep). Cleaned up atexit.
-os.environ.setdefault("SPARK_GRAFT_RUN_ID", f"bench-{os.getpid()}")
+from finance_reporting_etl_spark.session import get_spark, isolate_run  # noqa: E402
 
-import atexit  # noqa: E402
-import glob as _glob  # noqa: E402
-import shutil as _shutil  # noqa: E402
+isolate_run("bench")
 
 from finance_reporting_etl_spark.queries import CATALOG  # noqa: E402
-from finance_reporting_etl_spark.queries import _AUX_DIR  # noqa: E402
-from finance_reporting_etl_spark.session import get_spark  # noqa: E402
-
-
-@atexit.register
-def _cleanup_aux() -> None:
-    if "bench-" in _AUX_DIR:
-        _shutil.rmtree(_AUX_DIR, ignore_errors=True)
-    run = os.environ["SPARK_GRAFT_RUN_ID"].replace("-", "_")
-    for d in _glob.glob(f"/root/repo/spark-warehouse/bkt_*_{run}"):
-        _shutil.rmtree(d, ignore_errors=True)
 
 # Headliners: the reference-parity marts, the TPC-H-shaped joins/aggs,
 # and each extension-operator family at its most expensive.

@@ -657,16 +657,18 @@ def near_dup_clusters(
     pulls a label's label), so the jump self-join always matches and the
     fixpoint label is the component min.
     """
-    # persist, not eager localCheckpoint: edge generation still runs
-    # exactly once (the size probe materializes the cache), the blocks
-    # stay AQE-planned, no extra materialization job is paid, and they
-    # are released deterministically below instead of accumulating
-    # across a bench session (VERDICT r14 task 2)
+    # persist, not eager localCheckpoint: the blocks stay AQE-planned,
+    # no extra materialization job is paid, and they are released
+    # deterministically below instead of accumulating across a bench
+    # session (VERDICT r14 task 2)
     ed = edges.select("id_a", "id_b").persist()
-    # ONE job doubles as size gate and data fetch: collect at most
-    # bound+1 rows via the Arrow path; fewer than that means the small
-    # path already holds every edge and pays no second job (the old
-    # shape ran an eager checkpoint, a count AND a collect)
+    # ONE job doubles as size gate and data fetch: at most bound+1 rows
+    # reach the driver via the Arrow path; fewer than that means the
+    # small path already holds every edge and pays no second job.
+    # limit() caps only the collected rows: the Arrow collect runs
+    # every partition of ``ed`` and persist caches each one whole (all
+    # partitions were cached after the probe on Spark 4.1), so on a
+    # graph above the bound the probe still computes every edge once
     probe = ed.limit(small_graph_edges + 1).toPandas()
     if len(probe) <= small_graph_edges:
         # The dup graph is orders smaller than the corpus (it holds only
@@ -1526,9 +1528,10 @@ def incremental_clusters(
     one map over existing labels), never to the standing corpus.
 
     Inputs: ``base_clusters`` (id, cluster_id) — the persisted state;
-    ``delta_edges`` (id_a, id_b) with id_a a delta id and id_b either
-    side; ``delta_nodes`` (id). Output: (id, cluster_id) covering
-    base ∪ delta."""
+    ``delta_edges`` (id_a, id_b) — undirected edges, each endpoint
+    either a base id or a delta id (both ends are mapped through the
+    base labels); ``delta_nodes`` (id). Output: (id, cluster_id)
+    covering base ∪ delta."""
     lab = base_clusters.select("id", "cluster_id")
     lmap_a = lab.select(
         F.col("id").alias("id_a"), F.col("cluster_id").alias("la")

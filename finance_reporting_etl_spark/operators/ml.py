@@ -627,128 +627,6 @@ def negative_sampling(
     )
 
 
-def naive_bayes_lang_eval(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    label_col: str = "lang",
-    text_col: str = "text",
-    train_buckets: int = 192,
-    salt: str = "nb",
-) -> DataFrame:
-    """Multinomial Naive Bayes language classifier, trained and
-    evaluated in one Catalyst plan: md5-bucket 75/25 split, Laplace
-    (+1) smoothed per-(label, token) counts, log-posterior argmax on
-    the held-out docs, per-label accuracy out.
-
-    Everything is counting: token/label counts, vocabulary size,
-    priors — all exact integers — and each log term is the log of an
-    exact integer ratio, so both engines sum identical doubles (the
-    per-(doc, label) score is rounded to 6 before the argmax; ties
-    break on label ASC). The candidate fan-out joins each test token
-    against a BROADCAST (#labels x stats) table, then left-joins the
-    (label, token) count table on its natural key — the plan any
-    engine would want at corpus scale: no all-pairs, no collect except
-    nothing (V, priors and totals stay 1-row/NL-row frames).
-
-    Empty-text test docs still classify (prior-only argmax): the score
-    spine is test-docs x labels, with the token contribution
-    coalesced to 0.
-    """
-    from pyspark.sql import Window
-
-    from finance_reporting_etl_spark.functions.text import whitespace_tokens
-    from finance_reporting_etl_spark.operators.corpus import md5_bucket
-
-    d = docs.select(
-        F.col(id_col).alias("doc_id"),
-        F.col(label_col).alias("true_label"),
-        F.col(text_col).alias("text"),
-        (md5_bucket(id_col, salt=salt) < train_buckets).alias("is_train"),
-    )
-    toks = d.select(
-        "doc_id",
-        "true_label",
-        "is_train",
-        F.explode(whitespace_tokens(F.lower(F.col("text")))).alias("token"),
-    )
-    cnt = (
-        toks.filter("is_train")
-        .groupBy(F.col("true_label").alias("cand"), "token")
-        .agg(F.count(F.lit(1)).cast("bigint").alias("c"))
-    )
-    tot = cnt.groupBy("cand").agg(F.sum("c").cast("bigint").alias("tot_l"))
-    vv = cnt.agg(F.countDistinct("token").cast("bigint").alias("v"))
-    ntr = d.filter("is_train").agg(
-        F.count(F.lit(1)).cast("bigint").alias("n_train")
-    )
-    pri = (
-        d.filter("is_train")
-        .groupBy(F.col("true_label").alias("cand"))
-        .agg(F.count(F.lit(1)).cast("bigint").alias("n_docs"))
-    )
-    labels = (
-        pri.join(tot, "cand")
-        .crossJoin(F.broadcast(vv))
-        .crossJoin(F.broadcast(ntr))
-    )
-
-    te_tok = (
-        toks.filter(~F.col("is_train"))
-        .groupBy("doc_id", "token")
-        .agg(F.count(F.lit(1)).cast("bigint").alias("c_dw"))
-    )
-    tok_part = (
-        te_tok.crossJoin(F.broadcast(labels))
-        .join(cnt, ["cand", "token"], "left")
-        .groupBy("doc_id", "cand")
-        .agg(
-            F.sum(
-                F.col("c_dw")
-                * F.log(
-                    (F.coalesce(F.col("c"), F.lit(0)) + F.lit(1)).cast(
-                        "double"
-                    )
-                    / (F.col("tot_l") + F.col("v"))
-                )
-            ).alias("tp")
-        )
-    )
-    spine = (
-        d.filter(~F.col("is_train"))
-        .select("doc_id", "true_label")
-        .crossJoin(F.broadcast(labels))
-    )
-    scores = spine.join(tok_part, ["doc_id", "cand"], "left").select(
-        "doc_id",
-        "true_label",
-        "cand",
-        det_round(
-            F.coalesce(F.col("tp"), F.lit(0.0))
-            + F.log(F.col("n_docs").cast("double") / F.col("n_train")),
-            6,
-        ).alias("score"),
-    )
-    w = Window.partitionBy("doc_id").orderBy(
-        F.col("score").desc(), F.col("cand").asc()
-    )
-    pred = scores.withColumn("rn", F.row_number().over(w)).filter(
-        F.col("rn") == 1
-    )
-    return pred.groupBy(F.col("true_label").alias("lang")).agg(
-        F.count(F.lit(1)).cast("bigint").alias("n_test"),
-        F.sum((F.col("cand") == F.col("true_label")).cast("int"))
-        .cast("bigint")
-        .alias("n_correct"),
-        det_round(
-            F.sum((F.col("cand") == F.col("true_label")).cast("int")).cast(
-                "double"
-            )
-            / F.count(F.lit(1)),
-            6,
-        ).alias("accuracy"),
-    )
-
-
 def stratified_kfold(
     df: DataFrame,
     stratum_cols: list[str],
@@ -1197,7 +1075,12 @@ def boosted_reg_stumps(
     (round, feature, thr, pred_l, pred_r, sse_after DECIMAL) — the
     1-row-per-round collect is model parameters (the house bound),
     not data. Tie-break (gain desc, feature, thr) is deterministic
-    because gain is a closed form over exact integer moments."""
+    because gain is a closed form over exact integer moments.
+
+    Every ``feature_cols`` column must hold INTEGER values: split
+    thresholds are taken over the features cast to bigint, so a
+    fractional feature would be silently truncated and its splits
+    shifted."""
     # ONE scan for ALL rounds (guide §1.2): the base collapses to one
     # moment row per distinct feature TUPLE (n, Σy, Σy² — the Σy² per-
     # row product stays in DECIMAL(38,0), overflow-proof for any

@@ -22,7 +22,6 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from finance_reporting_etl_spark.functions.vectors import (
-    as_double_array,
     cosine,
     cosine_arrow_foldexact,
 )
@@ -86,28 +85,6 @@ def _hyperplanes(dim: int, n_planes: int, seed: int = 42) -> np.ndarray:
     """Deterministic Gaussian hyperplanes (public LSH construction)."""
     rng = np.random.RandomState(seed)
     return rng.randn(n_planes, dim).astype(np.float64)
-
-
-def signature_col(vec_col: str, planes: np.ndarray) -> F.Column:
-    """Sign-pattern bucket id: bit p = [dot(v, plane_p) >= 0].
-
-    Pure-Catalyst form (aggregate over zip_with per plane) — kept for
-    single-table use and as the no-Python reference; for many tables
-    use ``bucket_udf``, which does ALL tables in one Arrow-batched
-    numpy matmul (higher-order lambdas evaluate interpreted and cost
-    ~n_planes passes per row).
-    """
-    v = as_double_array(F.col(vec_col))
-    bucket = F.lit(0).cast("long")
-    for p, plane in enumerate(planes):
-        weights = F.array(*[F.lit(float(w)) for w in plane])
-        d = F.aggregate(
-            F.zip_with(v, weights, lambda x, wgt: x * wgt), F.lit(0.0), lambda acc, x: acc + x
-        )
-        bucket = bucket + F.when(d >= 0, F.shiftleft(F.lit(1).cast("long"), p)).otherwise(
-            F.lit(0).cast("long")
-        )
-    return bucket
 
 
 def bucket_udf(all_planes: np.ndarray):

@@ -1155,11 +1155,10 @@ def q_streaming_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     return run_file_stream(
         spark,
         lambda src: events.write.mode("overwrite").parquet(src),
-        lambda src, schema, tmp: streaming_rollup(
-            spark, src, schema, checkpoint_dir=f"{tmp}/ckpt", output_table=name
+        lambda src, schema, ckpt, _: streaming_rollup(
+            spark, src, schema, checkpoint_dir=ckpt, output_table=name
         ),
-        lambda tmp: spark.table(name),
-        prefix="stream_rollup_",
+        lambda _: spark.table(name),
         label="streaming_hourly_rollup",
     )
 
@@ -1185,11 +1184,10 @@ def q_streaming_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     return run_file_stream(
         spark,
         lambda src: events.unionAll(events).write.mode("overwrite").parquet(src),
-        lambda src, schema, tmp: streaming_dedup(
-            spark, src, schema, checkpoint_dir=f"{tmp}/ckpt", output_table=name
+        lambda src, schema, ckpt, _: streaming_dedup(
+            spark, src, schema, checkpoint_dir=ckpt, output_table=name
         ),
-        lambda tmp: spark.table(name),
-        prefix="stream_dedup_",
+        lambda _: spark.table(name),
         label="streaming_dedup_events",
     )
 
@@ -1214,16 +1212,15 @@ def q_stateful_user_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
     return run_file_stream(
         spark,
         lambda src: events.repartition(4).write.mode("overwrite").parquet(src),
-        lambda src, schema, tmp: stateful_running_totals(
-            spark, src, schema, checkpoint_dir=f"{tmp}/ckpt", output_table=name
+        lambda src, schema, ckpt, _: stateful_running_totals(
+            spark, src, schema, checkpoint_dir=ckpt, output_table=name
         ),
-        lambda tmp: spark.table(name)
+        lambda _: spark.table(name)
         .groupBy("user_id")
         .agg(
             F.max_by("n_events", "upd_seq").alias("n_events"),
             det_round(F.max_by("total_value", "upd_seq"), 4).alias("total_value"),
         ),
-        prefix="stateful_totals_",
         label="stateful_user_totals",
     )
 
@@ -1808,22 +1805,19 @@ def q_streaming_merge_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     foreachBatch merge_latest upsert; because latest-per-key is an
     associative argmin, the incrementally-maintained target must equal
     the one-shot batch merge regardless of the batch split."""
-    from finance_reporting_etl_spark.streaming.merge import streaming_merge_upsert
-    from finance_reporting_etl_spark.streaming.staging import run_file_stream
+    from finance_reporting_etl_spark.streaming.merge import upsert_latest
+    from finance_reporting_etl_spark.streaming.staging import replay_state_fold
 
     events = _t(spark, sf_dir, "events").select(
         "event_id", "ts", "user_id", "event_type", "value"
     )
-    return run_file_stream(
+    return replay_state_fold(
         spark,
         lambda src: events.repartition(4).write.mode("overwrite").parquet(src),
-        lambda src, schema, tmp: streaming_merge_upsert(
-            spark, src, schema,
-            checkpoint_dir=f"{tmp}/ckpt", target_dir=f"{tmp}/target",
-            keys=["user_id"], order_col="ts", tiebreak_col="event_id",
+        lambda state, batch: upsert_latest(
+            state, batch, ["user_id"], "ts", "event_id"
         ),
-        lambda tmp: spark.read.parquet(f"{tmp}/target"),
-        prefix="stream_merge_",
+        lambda state: state,
         label="streaming_merge_upsert",
     )
 
@@ -2274,11 +2268,10 @@ def q_streaming_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
     return run_file_stream(
         spark,
         lambda src: events.repartition(4).write.mode("overwrite").parquet(src),
-        lambda src, schema, tmp: streaming_sessionize(
-            spark, src, schema, checkpoint_dir=f"{tmp}/ckpt", output_table=name
+        lambda src, schema, ckpt, _: streaming_sessionize(
+            spark, src, schema, checkpoint_dir=ckpt, output_table=name
         ),
-        lambda tmp: spark.table(name),
-        prefix="stream_sess_",
+        lambda _: spark.table(name),
         label="streaming_sessionize_events",
     )
 
@@ -2331,13 +2324,11 @@ def q_streaming_watermark_late_drop(spark: SparkSession, sf_dir: str) -> DataFra
     return run_file_stream(
         spark,
         lambda src: stage_microbatches(batches, src),
-        lambda src, schema, tmp: streaming_rollup_to_files(
-            spark, src, schema,
-            checkpoint_dir=f"{tmp}/ckpt", output_dir=f"{tmp}/out",
+        lambda src, schema, ckpt, sink: streaming_rollup_to_files(
+            spark, src, schema, checkpoint_dir=ckpt, output_dir=sink,
             bucket="1 day", watermark="7 days", max_files_per_trigger=1,
         ),
-        lambda tmp: spark.read.parquet(f"{tmp}/out"),
-        prefix="stream_wm_",
+        lambda sink: spark.read.parquet(sink),
         label="streaming_watermark_late_drop",
     )
 
@@ -2386,11 +2377,10 @@ def q_stateful_session_timeout(spark: SparkSession, sf_dir: str) -> DataFrame:
     return run_file_stream(
         spark,
         lambda src: stage_microbatches(batches, src),
-        lambda src, schema, tmp: stateful_session_timeout(
-            spark, src, schema, checkpoint_dir=f"{tmp}/ckpt", output_table=name
+        lambda src, schema, ckpt, _: stateful_session_timeout(
+            spark, src, schema, checkpoint_dir=ckpt, output_table=name
         ),
-        lambda tmp: spark.table(name),
-        prefix="stream_ttl_",
+        lambda _: spark.table(name),
         label="stateful_session_timeout",
     )
 
@@ -2765,36 +2755,18 @@ def q_streaming_ann_maintain(spark: SparkSession, sf_dir: str) -> DataFrame:
         ivf_topk_from_index,
     )
     from finance_reporting_etl_spark.streaming.staging import (
-        run_file_stream,
+        replay_partial_fold,
         stage_microbatches,
     )
 
     emb = _t(spark, sf_dir, "embeddings")
-
-    def start(src, schema, tmp):
-        def fold(batch, batch_id):
-            ivf_index(batch).write.mode("overwrite").parquet(
-                f"{tmp}/sink/batch_id={batch_id}"
-            )
-
-        return (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", "1")
-            .parquet(src)
-            .writeStream.foreachBatch(fold)
-            .option("checkpointLocation", f"{tmp}/ckpt")
-            .trigger(availableNow=True)
-            .start()
-        )
-
-    maintained = run_file_stream(
+    maintained = replay_partial_fold(
         spark,
         lambda src: stage_microbatches(
             [emb.filter(F.col("vec_id") % 3 == i) for i in range(3)], src
         ),
-        start,
-        lambda tmp: spark.read.parquet(f"{tmp}/sink").select("id", "cell"),
-        prefix="stream_ivf_",
+        ivf_index,
+        lambda partials: partials.select("id", "cell"),
         label="streaming_ann_index_maintain",
     )
     index = _persist_aux(spark, maintained, "ivf_index_stream")
@@ -3056,12 +3028,12 @@ def q_streaming_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     any corpus size."""
     from finance_reporting_etl_spark.functions.text import whitespace_tokens
     from finance_reporting_etl_spark.operators.sketches import (
+        cms_cell_counts,
         cms_estimates,
         cms_placements,
     )
-    from finance_reporting_etl_spark.streaming.merge import streaming_cms_maintain
     from finance_reporting_etl_spark.streaming.staging import (
-        run_file_stream,
+        replay_partial_fold,
         stage_microbatches,
     )
 
@@ -3072,23 +3044,24 @@ def q_streaming_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     cells = _persist_aux(spark, cms_placements(tc), "cms_placements_stream")
 
-    sketch = run_file_stream(
+    def batch_cells(batch: DataFrame) -> DataFrame:
+        batch_tc = (
+            batch.select(toks_expr.alias("token"))
+            .groupBy("token")
+            .agg(F.count(F.lit(1)).alias("cnt"))
+        )
+        return cms_cell_counts(batch_tc, F.broadcast(cells))
+
+    sketch = replay_partial_fold(
         spark,
         lambda src: stage_microbatches(
             [docs.filter(F.col("doc_id") % 3 == i) for i in range(3)], src
         ),
-        lambda src, schema, tmp: streaming_cms_maintain(
-            spark, src, schema,
-            checkpoint_dir=f"{tmp}/ckpt", sketch_dir=f"{tmp}/sketch",
-            placements=cells, token_expr=toks_expr,
-        ),
-        # per-batch deltas live in batch_id partitions (idempotent
-        # under foreachBatch replays); merging them IS the sketch's
-        # cell-wise addition
-        lambda tmp: spark.read.parquet(f"{tmp}/sketch")
-        .groupBy("d", "col")
+        batch_cells,
+        # merging the per-batch cell deltas IS the sketch's cell-wise
+        # addition
+        lambda partials: partials.groupBy("d", "col")
         .agg(F.sum("cell_cnt").alias("cell_cnt")),
-        prefix="stream_cms_",
         label="streaming_heavy_hitters",
     )
     est = cms_estimates(cells, sketch)
@@ -3642,8 +3615,8 @@ def q_cdc_changelog_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     batches) — and reads compact by filtering op = 'D'. The oracle
     computes the same final state from the full changelog in one shot;
     equality proves tombstone shadowing across every batch boundary."""
-    from finance_reporting_etl_spark.streaming.merge import streaming_merge_upsert
-    from finance_reporting_etl_spark.streaming.staging import run_file_stream
+    from finance_reporting_etl_spark.streaming.merge import upsert_latest
+    from finance_reporting_etl_spark.streaming.staging import replay_state_fold
 
     ev = _t(spark, sf_dir, "events")
     changelog = ev.select(
@@ -3653,22 +3626,18 @@ def q_cdc_changelog_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.when(F.col("event_type") == "error", "D").otherwise("U").alias("op"),
         "value",
     )
-    return run_file_stream(
+    return replay_state_fold(
         spark,
         lambda src: changelog.repartition(4).write.mode("overwrite").parquet(src),
-        lambda src, schema, tmp: streaming_merge_upsert(
-            spark, src, schema,
-            checkpoint_dir=f"{tmp}/ckpt", target_dir=f"{tmp}/target",
-            keys=["user_id"], order_col="ts", tiebreak_col="event_id",
+        lambda state, batch: upsert_latest(
+            state, batch, ["user_id"], "ts", "event_id"
         ),
-        lambda tmp: spark.read.parquet(f"{tmp}/target")
-        .filter(F.col("op") != "D")
+        lambda state: state.filter(F.col("op") != "D")
         .select(
             "user_id",
             F.col("ts").alias("updated_at"),
             det_round("value", 6).alias("value"),
         ),
-        prefix="cdc_",
         label="cdc_changelog_apply",
     )
 
@@ -4197,12 +4166,11 @@ def q_streaming_sliding_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     return run_file_stream(
         spark,
         lambda src: events.write.mode("overwrite").parquet(src),
-        lambda src, schema, tmp: streaming_rollup(
-            spark, src, schema, checkpoint_dir=f"{tmp}/ckpt", output_table=name,
+        lambda src, schema, ckpt, _: streaming_rollup(
+            spark, src, schema, checkpoint_dir=ckpt, output_table=name,
             bucket="6 hours", slide="2 hours", watermark="12 hours",
         ),
-        lambda tmp: spark.table(name),
-        prefix="stream_slide_",
+        lambda _: spark.table(name),
         label="streaming_sliding_window_counts",
     )
 
@@ -4302,12 +4270,11 @@ def q_streaming_static_dim_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     return run_file_stream(
         spark,
         lambda src: events.repartition(4).write.mode("overwrite").parquet(src),
-        lambda src, schema, tmp: streaming_static_dim_rollup(
+        lambda src, schema, ckpt, _: streaming_static_dim_rollup(
             spark, src, schema, dim,
-            checkpoint_dir=f"{tmp}/ckpt", output_table=name,
+            checkpoint_dir=ckpt, output_table=name,
         ),
-        lambda tmp: spark.table(name),
-        prefix="stream_dim_",
+        lambda _: spark.table(name),
         label="streaming_static_dim_join",
     )
 
@@ -5354,11 +5321,10 @@ def q_streaming_value_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     table reads identically to the one-shot batch computation (the
     shared oracle proves it). Replayed as 3 micro-batches; reference
     (period-A) counts stay a static table. State per batch: 10 rows.
-    Operators: streaming.drift.streaming_bin_count_fold +
+    Replay: streaming.staging.replay_partial_fold; operator:
     operators.drift.psi_from_counts."""
     from finance_reporting_etl_spark.operators.drift import psi_from_counts, value_bin
-    from finance_reporting_etl_spark.streaming.drift import streaming_bin_count_fold
-    from finance_reporting_etl_spark.streaming.staging import run_file_stream
+    from finance_reporting_etl_spark.streaming.staging import replay_partial_fold
 
     ev = _t(spark, sf_dir, "events")
     # Data-derived period boundary (exact epoch-micros midpoint; the
@@ -5375,21 +5341,17 @@ def q_streaming_value_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("bin")
         .agg(F.count(F.lit(1)).cast("bigint").alias("n_a"))
     )
-    b_counts = run_file_stream(
+    b_counts = replay_partial_fold(
         spark,
         lambda src: ev.filter(F.unix_micros("ts") >= mid_us)
         .select("ts", "value")
         .repartition(3)
         .write.parquet(src),
-        lambda src, schema, tmp: streaming_bin_count_fold(
-            spark, src, schema,
-            checkpoint_dir=f"{tmp}/ckpt", sink_dir=f"{tmp}/sink",
-            bin_expr=value_bin(),
-        ),
-        lambda tmp: spark.read.parquet(f"{tmp}/sink")
+        lambda batch: batch.select(value_bin())
         .groupBy("bin")
+        .agg(F.count(F.lit(1)).cast("bigint").alias("n")),
+        lambda partials: partials.groupBy("bin")
         .agg(F.sum("n").cast("bigint").alias("n_b")),
-        prefix="stream_psi_",
         label="streaming_value_drift_psi",
     )
     return psi_from_counts(a_counts, b_counts)
@@ -5845,10 +5807,10 @@ def q_streaming_ohlc_maintain(spark: SparkSession, sf_dir: str) -> DataFrame:
     merge-correctness end to end."""
     from finance_reporting_etl_spark.streaming.rollup import (
         merge_ohlc_partials,
-        streaming_ohlc_maintain,
+        ohlc_partials,
     )
     from finance_reporting_etl_spark.streaming.staging import (
-        run_file_stream,
+        replay_partial_fold,
         stage_microbatches,
     )
 
@@ -5856,18 +5818,14 @@ def q_streaming_ohlc_maintain(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_id", "ts", "event_type", "value"
     )
     batches = [ev.filter(F.col("event_id") % 3 == i) for i in range(3)]
-    return run_file_stream(
+    return replay_partial_fold(
         spark,
         lambda src: stage_microbatches(batches, src),
-        lambda src, schema, tmp: streaming_ohlc_maintain(
-            spark, src, schema,
-            checkpoint_dir=f"{tmp}/ckpt", bars_dir=f"{tmp}/bars",
-        ),
-        lambda tmp: merge_ohlc_partials(spark.read.parquet(f"{tmp}/bars")).select(
+        ohlc_partials,
+        lambda partials: merge_ohlc_partials(partials).select(
             "event_type", "day", "open_cents", "high_cents",
             "low_cents", "close_cents", "n_ticks",
         ),
-        prefix="stream_ohlc_",
         label="streaming_ohlc_maintain",
     )
 
@@ -8956,11 +8914,8 @@ def q_streaming_trial_balance(spark: SparkSession, sf_dir: str) -> DataFrame:
     the one-shot batch computation no matter where the micro-batch
     boundaries fall (the shared oracle proves it). Replayed as 3
     micro-batches; sink state per batch: one row per touched (month,
-    account). Operator: streaming.rollup.streaming_grouped_sum_fold."""
-    from finance_reporting_etl_spark.streaming.rollup import (
-        streaming_grouped_sum_fold,
-    )
-    from finance_reporting_etl_spark.streaming.staging import run_file_stream
+    account). Replay: streaming.staging.replay_partial_fold."""
+    from finance_reporting_etl_spark.streaming.staging import replay_partial_fold
 
     def batch_agg(batch: DataFrame) -> DataFrame:
         return (
@@ -8973,22 +8928,16 @@ def q_streaming_trial_balance(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
 
-    stream_part = run_file_stream(
+    stream_part = replay_partial_fold(
         spark,
         lambda src: _tb_orders(spark, sf_dir).repartition(3).write.parquet(src),
-        lambda src, schema, tmp: streaming_grouped_sum_fold(
-            spark, src, schema,
-            checkpoint_dir=f"{tmp}/ckpt", sink_dir=f"{tmp}/sink",
-            batch_agg=batch_agg,
-        ),
-        lambda tmp: spark.read.parquet(f"{tmp}/sink")
-        .groupBy("month", "account")
+        batch_agg,
+        lambda partials: partials.groupBy("month", "account")
         .agg(
             F.sum("n").cast("bigint").alias("n"),
             F.sum("d").cast("bigint").alias("d"),
             F.sum("c").cast("bigint").alias("c"),
         ),
-        prefix="stream_tb_",
         label="streaming_trial_balance",
     )
     static_part = (
@@ -9850,14 +9799,11 @@ def q_streaming_entropy_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
     entropy is computed ONCE over the merged exact counts — counts
     are order-free mergeable integers, so the result is bit-identical
     to the one-shot batch query regardless of micro-batch boundaries
-    (the SHARED event_type_entropy_daily oracle proves it). Operator:
-    streaming.rollup.streaming_grouped_sum_fold."""
+    (the SHARED event_type_entropy_daily oracle proves it). Replay:
+    streaming.staging.replay_partial_fold."""
     from pyspark.sql import Window
 
-    from finance_reporting_etl_spark.streaming.rollup import (
-        streaming_grouped_sum_fold,
-    )
-    from finance_reporting_etl_spark.streaming.staging import run_file_stream
+    from finance_reporting_etl_spark.streaming.staging import replay_partial_fold
 
     def batch_agg(batch: DataFrame) -> DataFrame:
         return (
@@ -9866,10 +9812,9 @@ def q_streaming_entropy_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).agg(F.count(F.lit(1)).cast("bigint").alias("c"))
         )
 
-    def finish(tmp: str) -> DataFrame:
+    def finish(partials: DataFrame) -> DataFrame:
         c = (
-            spark.read.parquet(f"{tmp}/sink")
-            .groupBy("day", "event_type")
+            partials.groupBy("day", "event_type")
             .agg(F.sum("c").cast("bigint").alias("c"))
         )
         w = c.withColumn(
@@ -9894,16 +9839,11 @@ def q_streaming_entropy_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
 
     src_df = _t(spark, sf_dir, "events").select("ts", "event_type")
-    return run_file_stream(
+    return replay_partial_fold(
         spark,
         lambda src: src_df.repartition(3).write.parquet(src),
-        lambda src, schema, tmp: streaming_grouped_sum_fold(
-            spark, src, schema,
-            checkpoint_dir=f"{tmp}/ckpt", sink_dir=f"{tmp}/sink",
-            batch_agg=batch_agg,
-        ),
+        batch_agg,
         finish,
-        prefix="stream_entropy_",
         label="streaming_entropy_monitor",
     )
 
@@ -10072,12 +10012,9 @@ def q_streaming_ar_aging(spark: SparkSession, sf_dir: str) -> DataFrame:
     posts additive (segment, bucket) partials — counts and cents are
     order-free mergeable integers, so the merged aging equals the
     one-shot batch computation regardless of micro-batch boundaries
-    (the SHARED ar_aging_buckets oracle proves it). Operator:
-    streaming.rollup.streaming_grouped_sum_fold."""
-    from finance_reporting_etl_spark.streaming.rollup import (
-        streaming_grouped_sum_fold,
-    )
-    from finance_reporting_etl_spark.streaming.staging import run_file_stream
+    (the SHARED ar_aging_buckets oracle proves it). Replay:
+    streaming.staging.replay_partial_fold."""
+    from finance_reporting_etl_spark.streaming.staging import replay_partial_fold
 
     cdim = _t(spark, sf_dir, "customer").select("c_custkey", "c_mktsegment")
     age = F.datediff(
@@ -10109,21 +10046,15 @@ def q_streaming_ar_aging(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("o_orderstatus") == "O")
         & (F.col("o_orderdate").cast("date") <= F.lit("1998-08-01").cast("date"))
     ).select("o_custkey", "o_orderdate", "o_totalprice")
-    return run_file_stream(
+    return replay_partial_fold(
         spark,
         lambda src: src_df.repartition(3).write.parquet(src),
-        lambda src, schema, tmp: streaming_grouped_sum_fold(
-            spark, src, schema,
-            checkpoint_dir=f"{tmp}/ckpt", sink_dir=f"{tmp}/sink",
-            batch_agg=batch_agg,
-        ),
-        lambda tmp: spark.read.parquet(f"{tmp}/sink")
-        .groupBy("segment", "bucket")
+        batch_agg,
+        lambda partials: partials.groupBy("segment", "bucket")
         .agg(
             F.sum("n").cast("bigint").alias("n_orders"),
             F.sum("c").cast("bigint").alias("ar_cents"),
         ),
-        prefix="stream_aging_",
         label="streaming_ar_aging",
     )
 
@@ -10247,11 +10178,8 @@ def q_streaming_balance_rollforward(spark: SparkSession, sf_dir: str) -> DataFra
     merged ledger. Integer partials are order-free mergeable, so the
     statement is bit-identical to the one-shot batch mart no matter
     where the micro-batch boundaries fall (the SHARED oracle proves
-    it). Operator: streaming.rollup.streaming_grouped_sum_fold."""
-    from finance_reporting_etl_spark.streaming.rollup import (
-        streaming_grouped_sum_fold,
-    )
-    from finance_reporting_etl_spark.streaming.staging import run_file_stream
+    it). Replay: streaming.staging.replay_partial_fold."""
+    from finance_reporting_etl_spark.streaming.staging import replay_partial_fold
 
     def batch_agg(batch: DataFrame) -> DataFrame:
         return (
@@ -10263,21 +10191,15 @@ def q_streaming_balance_rollforward(spark: SparkSession, sf_dir: str) -> DataFra
             )
         )
 
-    stream_part = run_file_stream(
+    stream_part = replay_partial_fold(
         spark,
         lambda src: _tb_orders(spark, sf_dir).repartition(3).write.parquet(src),
-        lambda src, schema, tmp: streaming_grouped_sum_fold(
-            spark, src, schema,
-            checkpoint_dir=f"{tmp}/ckpt", sink_dir=f"{tmp}/sink",
-            batch_agg=batch_agg,
-        ),
-        lambda tmp: spark.read.parquet(f"{tmp}/sink")
-        .groupBy("month", "account")
+        batch_agg,
+        lambda partials: partials.groupBy("month", "account")
         .agg(
             F.sum("d").cast("bigint").alias("d"),
             F.sum("c").cast("bigint").alias("c"),
         ),
-        prefix="stream_rollfwd_",
         label="streaming_balance_rollforward",
     )
     static_part = (
@@ -10365,30 +10287,21 @@ def q_streaming_cash_flow_indirect(spark: SparkSession, sf_dir: str) -> DataFram
     merged revenue partials yield collections by the one-month shift
     and the statement assembles exactly as the batch mart — integer
     partials are order-free mergeable, so micro-batch boundaries move
-    nothing (the SHARED oracle proves it). Operator:
-    streaming.rollup.streaming_grouped_sum_fold."""
-    from finance_reporting_etl_spark.streaming.rollup import (
-        streaming_grouped_sum_fold,
-    )
-    from finance_reporting_etl_spark.streaming.staging import run_file_stream
+    nothing (the SHARED oracle proves it). Replay:
+    streaming.staging.replay_partial_fold."""
+    from finance_reporting_etl_spark.streaming.staging import replay_partial_fold
 
     def batch_agg(batch: DataFrame) -> DataFrame:
         return batch.groupBy("month").agg(
             F.sum("cents").cast("bigint").alias("c")
         )
 
-    rev = run_file_stream(
+    rev = replay_partial_fold(
         spark,
         lambda src: _tb_orders(spark, sf_dir).repartition(3).write.parquet(src),
-        lambda src, schema, tmp: streaming_grouped_sum_fold(
-            spark, src, schema,
-            checkpoint_dir=f"{tmp}/ckpt", sink_dir=f"{tmp}/sink",
-            batch_agg=batch_agg,
-        ),
-        lambda tmp: spark.read.parquet(f"{tmp}/sink")
-        .groupBy("month")
+        batch_agg,
+        lambda partials: partials.groupBy("month")
         .agg(F.sum("c").cast("bigint").alias("revenue_cents")),
-        prefix="stream_cf_",
         label="streaming_cash_flow_indirect",
     )
     ret = _tb_returns(spark, sf_dir).groupBy("month").agg(
@@ -12186,10 +12099,7 @@ def q_streaming_intercompany_elimination(spark: SparkSession, sf_dir: str) -> Da
     one-shot batch mart no matter where micro-batch boundaries fall —
     the SHARED oracle proves it. Replayed as 3 micro-batches; the ppm
     share is applied once at read-back (never folded)."""
-    from finance_reporting_etl_spark.streaming.rollup import (
-        streaming_grouped_sum_fold,
-    )
-    from finance_reporting_etl_spark.streaming.staging import run_file_stream
+    from finance_reporting_etl_spark.streaming.staging import replay_partial_fold
 
     o = _t(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
     cst = _t(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
@@ -12229,7 +12139,7 @@ def q_streaming_intercompany_elimination(spark: SparkSession, sf_dir: str) -> Da
             )
         )
 
-    out = run_file_stream(
+    out = replay_partial_fold(
         spark,
         # stage only the four columns the fold reads (guide: project
         # before the exchange — the other 12 lineitem columns were
@@ -12238,13 +12148,8 @@ def q_streaming_intercompany_elimination(spark: SparkSession, sf_dir: str) -> Da
         .select("l_orderkey", "l_suppkey", "l_extendedprice", "l_discount")
         .repartition(3)
         .write.parquet(src),
-        lambda src, schema, tmp: streaming_grouped_sum_fold(
-            spark, src, schema,
-            checkpoint_dir=f"{tmp}/ckpt", sink_dir=f"{tmp}/sink",
-            batch_agg=batch_agg,
-        ),
-        lambda tmp: spark.read.parquet(f"{tmp}/sink")
-        .groupBy("entity")
+        batch_agg,
+        lambda partials: partials.groupBy("entity")
         .agg(
             F.sum("n").cast("bigint").alias("n_lines"),
             F.sum("g").cast("bigint").alias("gross_cents"),
@@ -12262,7 +12167,6 @@ def q_streaming_intercompany_elimination(spark: SparkSession, sf_dir: str) -> Da
             "entity", "n_lines", "gross_cents", "intercompany_cents",
             "external_cents", "intercompany_ppm",
         ),
-        prefix="stream_ic_",
         label="streaming_intercompany_elimination",
     )
     odim.unpersist()
@@ -12758,10 +12662,7 @@ def q_streaming_kmv_sketch_maintain(spark: SparkSession, sf_dir: str) -> DataFra
     over lineitem; read-back dedupes (col, val), re-cuts bottom-64 per
     column, and lands on EXACTLY the batch query's rows (shared
     oracle). The exact-NDV yardstick stays a static full read."""
-    from finance_reporting_etl_spark.streaming.rollup import (
-        streaming_grouped_sum_fold,
-    )
-    from finance_reporting_etl_spark.streaming.staging import run_file_stream
+    from finance_reporting_etl_spark.streaming.staging import replay_partial_fold
 
     def batch_agg(batch: DataFrame) -> DataFrame:
         c = batch.selectExpr(
@@ -12812,10 +12713,9 @@ def q_streaming_kmv_sketch_maintain(spark: SparkSession, sf_dir: str) -> DataFra
             .drop("__rn")
         )
 
-    def readback(tmp: str) -> DataFrame:
+    def readback(partials: DataFrame) -> DataFrame:
         sk = (
-            spark.read.parquet(f"{tmp}/sink")
-            .select("col_name", "val", "h32")
+            partials.select("col_name", "val", "h32")
             .distinct()
         )
         # same single-pass re-cut as batch_agg: one window rank over
@@ -12868,20 +12768,15 @@ def q_streaming_kmv_sketch_maintain(spark: SparkSession, sf_dir: str) -> DataFra
             )
         )
 
-    return run_file_stream(
+    return replay_partial_fold(
         spark,
         # stage only the three key columns the sketch folds over
         lambda src: _t(spark, sf_dir, "lineitem")
         .select("l_partkey", "l_suppkey", "l_orderkey")
         .repartition(3)
         .write.parquet(src),
-        lambda src, schema, tmp: streaming_grouped_sum_fold(
-            spark, src, schema,
-            checkpoint_dir=f"{tmp}/ckpt", sink_dir=f"{tmp}/sink",
-            batch_agg=batch_agg,
-        ),
+        batch_agg,
         readback,
-        prefix="stream_kmv_",
         label="streaming_kmv_sketch_maintain",
     )
 
@@ -13275,10 +13170,7 @@ def q_streaming_nrr_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
     keeps."""
     from pyspark.sql import Window
 
-    from finance_reporting_etl_spark.streaming.rollup import (
-        streaming_grouped_sum_fold,
-    )
-    from finance_reporting_etl_spark.streaming.staging import run_file_stream
+    from finance_reporting_etl_spark.streaming.staging import replay_partial_fold
 
     def batch_agg(batch: DataFrame) -> DataFrame:
         return (
@@ -13289,10 +13181,9 @@ def q_streaming_nrr_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
             .agg(F.round(F.sum("value") * 100).cast("bigint").alias("c"))
         )
 
-    def readback(tmp: str) -> DataFrame:
+    def readback(partials: DataFrame) -> DataFrame:
         uw = (
-            spark.read.parquet(f"{tmp}/sink")
-            .groupBy("user_id", "week")
+            partials.groupBy("user_id", "week")
             .agg(F.sum("c").cast("bigint").alias("cents"))
         )
         mx = uw.agg(F.max("week").alias("maxw"))
@@ -13327,19 +13218,14 @@ def q_streaming_nrr_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
 
-    return run_file_stream(
+    return replay_partial_fold(
         spark,
         lambda src: _t(spark, sf_dir, "events")
         .select("user_id", "ts", "event_type", "value")
         .repartition(3)
         .write.parquet(src),
-        lambda src, schema, tmp: streaming_grouped_sum_fold(
-            spark, src, schema,
-            checkpoint_dir=f"{tmp}/ckpt", sink_dir=f"{tmp}/sink",
-            batch_agg=batch_agg,
-        ),
+        batch_agg,
         readback,
-        prefix="stream_nrr_",
         label="streaming_nrr_monitor",
     )
 
@@ -13918,20 +13804,16 @@ def q_streaming_poisson_alarm(spark: SparkSession, sf_dir: str) -> DataFrame:
     computed once at read-back — bit-identical to the batch chart by
     the shared oracle. The state is one row per active hour, the
     smallest possible alarm memory."""
-    from finance_reporting_etl_spark.streaming.rollup import (
-        streaming_grouped_sum_fold,
-    )
-    from finance_reporting_etl_spark.streaming.staging import run_file_stream
+    from finance_reporting_etl_spark.streaming.staging import replay_partial_fold
 
     def batch_agg(batch: DataFrame) -> DataFrame:
         return batch.groupBy(F.date_trunc("hour", "ts").alias("hour")).agg(
             F.count(F.lit(1)).cast("bigint").alias("c")
         )
 
-    def readback(tmp: str) -> DataFrame:
+    def readback(partials: DataFrame) -> DataFrame:
         h = (
-            spark.read.parquet(f"{tmp}/sink")
-            .groupBy("hour")
+            partials.groupBy("hour")
             .agg(F.sum("c").cast("bigint").alias("n_events"))
         )
         t = h.agg(
@@ -13953,19 +13835,14 @@ def q_streaming_poisson_alarm(spark: SparkSession, sf_dir: str) -> DataFrame:
             " END AS BIGINT) AS breach_low",
         )
 
-    return run_file_stream(
+    return replay_partial_fold(
         spark,
         lambda src: _t(spark, sf_dir, "events")
         .select("ts")
         .repartition(3)
         .write.parquet(src),
-        lambda src, schema, tmp: streaming_grouped_sum_fold(
-            spark, src, schema,
-            checkpoint_dir=f"{tmp}/ckpt", sink_dir=f"{tmp}/sink",
-            batch_agg=batch_agg,
-        ),
+        batch_agg,
         readback,
-        prefix="stream_cchart_",
         label="streaming_poisson_alarm",
     )
 
@@ -15709,33 +15586,25 @@ def q_streaming_phash_signature_maintain(spark: SparkSession, sf_dir: str) -> Da
         attach_synthetic_png,
         perceptual_hash_media,
     )
-    from finance_reporting_etl_spark.streaming.rollup import (
-        streaming_grouped_sum_fold,
-    )
-    from finance_reporting_etl_spark.streaming.staging import run_file_stream
+    from finance_reporting_etl_spark.streaming.staging import replay_partial_fold
 
     def batch_agg(batch: DataFrame) -> DataFrame:
         return perceptual_hash_media(attach_synthetic_png(batch))
 
-    def readback(tmp: str) -> DataFrame:
-        sigs = spark.read.parquet(f"{tmp}/sink").select(
+    def readback(partials: DataFrame) -> DataFrame:
+        sigs = partials.select(
             "doc_id", "width", "height", "hash_lo", "hash_hi"
         )
         return _phash_savings_census(sigs)
 
-    return run_file_stream(
+    return replay_partial_fold(
         spark,
         lambda src: _t(spark, sf_dir, "documents")
         .select("doc_id")
         .repartition(3)
         .write.parquet(src),
-        lambda src, schema, tmp: streaming_grouped_sum_fold(
-            spark, src, schema,
-            checkpoint_dir=f"{tmp}/ckpt", sink_dir=f"{tmp}/sink",
-            batch_agg=batch_agg,
-        ),
+        batch_agg,
         readback,
-        prefix="stream_phash_",
         label="streaming_phash_signature_maintain",
     )
 
@@ -16128,7 +15997,7 @@ def q_streaming_ivf_upsert_reassign(spark: SparkSession, sf_dir: str) -> DataFra
     upsert (associative latest-per-key, any batching reaches the same
     fixpoint), and the maintained state IS the (id, cell) index:
     each micro-batch quantizes ONLY its arriving vectors map-side
-    (``transform=`` hook → ``ivf_cell_expr``, the same fixed-centroid
+    (``ivf_cell_expr`` in the fold step, the same fixed-centroid
     quantizer as a batch rebuild) before the upsert, so nothing
     rescans or re-quantizes old state (VERDICT r12 task 8a; made
     literally true per ADVICE r13 — previously the stream maintained
@@ -16147,9 +16016,9 @@ def q_streaming_ivf_upsert_reassign(spark: SparkSession, sf_dir: str) -> DataFra
         ivf_cell_expr,
         ivf_index,
     )
-    from finance_reporting_etl_spark.streaming.merge import streaming_merge_upsert
+    from finance_reporting_etl_spark.streaming.merge import upsert_latest
     from finance_reporting_etl_spark.streaming.staging import (
-        run_file_stream,
+        replay_state_fold,
         stage_microbatches,
     )
 
@@ -16160,7 +16029,7 @@ def q_streaming_ivf_upsert_reassign(spark: SparkSession, sf_dir: str) -> DataFra
         "vec_id", F.reverse("embedding").alias("embedding"),
         F.lit(2).alias("version"),
     )
-    streamed_state = run_file_stream(
+    streamed_state = replay_state_fold(
         spark,
         lambda src: stage_microbatches(
             [
@@ -16170,20 +16039,17 @@ def q_streaming_ivf_upsert_reassign(spark: SparkSession, sf_dir: str) -> DataFra
             ],
             src,
         ),
-        lambda src, schema, tmp: streaming_merge_upsert(
-            spark, src, schema,
-            checkpoint_dir=f"{tmp}/ckpt", target_dir=f"{tmp}/state",
-            keys=["vec_id"], order_col="version",
-            # incremental index maintenance: quantize ONLY the arriving
-            # micro-batch (identical fixed-centroid quantizer as a
-            # batch rebuild), drop the embedding before it ever enters
-            # the persisted state
-            transform=lambda b: b.select(
-                "vec_id", ivf_cell_expr().alias("cell"), "version"
-            ),
+        # incremental index maintenance: quantize ONLY the arriving
+        # micro-batch (identical fixed-centroid quantizer as a batch
+        # rebuild), drop the embedding before it ever enters the
+        # persisted state
+        lambda state, batch: upsert_latest(
+            state,
+            batch.select("vec_id", ivf_cell_expr().alias("cell"), "version"),
+            ["vec_id"],
+            "version",
         ),
-        lambda tmp: spark.read.parquet(f"{tmp}/state"),
-        prefix="stream_ivfup_",
+        lambda state: state,
         label="streaming_ivf_upsert_reassign",
     )
     stream_index = _persist_aux(
@@ -16370,8 +16236,8 @@ def q_streaming_semdecon_flag_maintain(spark: SparkSession, sf_dir: str) -> Data
     contamination census at read time; nothing ever rescans old
     vectors. Replayed as 3 disjoint micro-batches via foreachBatch;
     each batch persists its (id, cell) assignments (the accumulated
-    index the oracle re-reads) and appends its flagged ids + exact
-    max-score micro to the flag sink. The probe table is broadcast at
+    index the oracle re-reads), the flagged ones carrying their exact
+    max-score micro. The probe table is broadcast at
     fixture scale (eval suites are tiny next to a 100 TB corpus — the
     ngram_decontaminate argument); dropping the hint shuffle-joins the
     same plan. Output: the one-row census (train/eval/candidate/
@@ -16387,7 +16253,7 @@ def q_streaming_semdecon_flag_maintain(spark: SparkSession, sf_dir: str) -> Data
         ivf_probes_for,
     )
     from finance_reporting_etl_spark.streaming.staging import (
-        run_file_stream,
+        replay_partial_fold,
         stage_microbatches,
     )
 
@@ -16408,55 +16274,39 @@ def q_streaming_semdecon_flag_maintain(spark: SparkSession, sf_dir: str) -> Data
         .localCheckpoint()
     )
 
-    def start(src, schema, tmp):
-        def screen(batch, batch_id):
-            # checkpoint, then write + screen from the blocks: the
-            # write-once-read-back alternative was A/B-measured ~0.3s
-            # SLOWER per run (the flag leg re-reads parquet each
-            # batch, losing to the in-memory blocks)
-            bidx = ivf_index(batch).localCheckpoint()
-            bidx.write.mode("overwrite").parquet(
-                f"{tmp}/index/batch_id={batch_id}"
-            )
-            bv = batch.select(
-                F.col("vec_id").alias("train_id"), F.col("embedding").alias("t_vec")
-            )
-            flags = (
-                bidx.withColumnRenamed("id", "train_id")
-                .join(F.broadcast(probes), "cell")
-                .select("query_id", "train_id")
-                .join(F.broadcast(qv), "query_id")
-                .join(bv, "train_id")
-                .select(
-                    "train_id",
-                    det_micro(_cos_fx(F.col("q_vec"), F.col("t_vec")))
-                    .alias("score_micro"),
-                )
-                .groupBy("train_id")
-                .agg(F.max("score_micro").alias("mx"))
-                .filter(F.col("mx") >= 300000)
-            )
-            flags.write.mode("overwrite").parquet(
-                f"{tmp}/flags/batch_id={batch_id}"
-            )
-
-        return (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", "1")
-            .parquet(src)
-            .writeStream.foreachBatch(screen)
-            .option("checkpointLocation", f"{tmp}/ckpt")
-            .trigger(availableNow=True)
-            .start()
+    def screen(batch: DataFrame) -> DataFrame:
+        # the batch's (id, cell) assignments, each carrying its max
+        # probe score ``mx`` when that reaches 0.30 (null otherwise);
+        # checkpointed because the screen re-reads the assignments
+        bidx = ivf_index(batch).localCheckpoint()
+        bv = batch.select(
+            F.col("vec_id").alias("train_id"), F.col("embedding").alias("t_vec")
         )
+        flags = (
+            bidx.withColumnRenamed("id", "train_id")
+            .join(F.broadcast(probes), "cell")
+            .select("query_id", "train_id")
+            .join(F.broadcast(qv), "query_id")
+            .join(bv, "train_id")
+            .select(
+                "train_id",
+                det_micro(_cos_fx(F.col("q_vec"), F.col("t_vec")))
+                .alias("score_micro"),
+            )
+            .groupBy("train_id")
+            .agg(F.max("score_micro").alias("mx"))
+            .filter(F.col("mx") >= 300000)
+        )
+        return bidx.join(flags.withColumnRenamed("train_id", "id"), "id", "left")
 
-    def readback(tmp):
-        idx = spark.read.parquet(f"{tmp}/index").select("id", "cell")
+    def readback(partials: DataFrame) -> DataFrame:
+        idx = partials.select("id", "cell")
         _persist_aux(spark, idx, "semdecon_stream_index")
-        flags = spark.read.parquet(f"{tmp}/flags").select("train_id")
+        flags = partials.filter(F.col("mx").isNotNull()).select(
+            F.col("id").alias("train_id")
+        )
         n_cand = (
-            spark.read.parquet(f"{tmp}/index")
-            .withColumnRenamed("id", "train_id")
+            idx.withColumnRenamed("id", "train_id")
             .join(F.broadcast(probes), "cell")
             .agg(F.count(F.lit(1)).cast("bigint").alias("n_candidate_pairs"))
         )
@@ -16485,14 +16335,13 @@ def q_streaming_semdecon_flag_maintain(spark: SparkSession, sf_dir: str) -> Data
             )
         )
 
-    return run_file_stream(
+    return replay_partial_fold(
         spark,
         lambda src: stage_microbatches(
             [tr.filter(F.col("vec_id") % 3 == i) for i in range(3)], src
         ),
-        start,
+        screen,
         readback,
-        prefix="stream_semdecon_",
         label="streaming_semdecon_flag_maintain",
     )
 
@@ -16927,11 +16776,8 @@ def q_streaming_cluster_maintain(spark: SparkSession, sf_dir: str) -> DataFrame:
         jaccard_prep,
         near_dup_clusters,
     )
-    from finance_reporting_etl_spark.streaming.merge import (
-        _read_parquet_if_exists,
-    )
     from finance_reporting_etl_spark.streaming.staging import (
-        run_file_stream,
+        replay_state_fold,
         stage_microbatches,
     )
 
@@ -16952,58 +16798,29 @@ def q_streaming_cluster_maintain(spark: SparkSession, sf_dir: str) -> DataFrame:
     # outliving the query (VERDICT r14 task 2).
     prepped = jaccard_prep(docs, **kwb).persist()
 
-    def start(src, schema, tmp):
-        state_dir = f"{tmp}/state"
-
-        def merge_batch(batch_df, batch_id):
-            sess = batch_df.sparkSession
-            nodes = batch_df.select(F.col("doc_id").alias("id"))
-            batch_p = prepped.join(
-                nodes.select("id"), "id", "left_semi"
+    def merge_batch(existing, batch_df):
+        nodes = batch_df.select(F.col("doc_id").alias("id"))
+        batch_p = prepped.join(nodes.select("id"), "id", "left_semi")
+        if existing is None:
+            return near_dup_clusters(
+                jaccard_pairs_prepped(batch_p, **kw).select("id_a", "id_b"),
+                nodes,
             )
-            existing = _read_parquet_if_exists(sess, state_dir)
-            if existing is None:
-                st = near_dup_clusters(
-                    jaccard_pairs_prepped(batch_p, **kw).select(
-                        "id_a", "id_b"
-                    ),
-                    nodes,
-                )
-            else:
-                # one fused join per micro-batch (cross ∪ batch-self
-                # pairs, value-identical — VERDICT r14 task 4) instead
-                # of separate cross and self joins over the same prep
-                seen = (
-                    existing.select("id")
-                    .withColumn("__isb", F.lit(0))
-                    .unionByName(
-                        nodes.select("id").withColumn("__isb", F.lit(1))
-                    )
-                )
-                seen_p = prepped.join(seen, "id")
-                edges = jaccard_incident_pairs_prepped(
-                    batch_p, seen_p, "__isb", **kw
-                ).select("id_a", "id_b")
-                st = incremental_clusters(existing, edges, nodes)
-            # write-then-swap replaces the old checkpoint-then-
-            # overwrite: one materialization of the state per batch
-            from finance_reporting_etl_spark.streaming.merge import (
-                overwrite_state_dir,
-            )
-
-            overwrite_state_dir(st, state_dir)
-
-        return (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src)
-            .writeStream.foreachBatch(merge_batch)
-            .option("checkpointLocation", f"{tmp}/ckpt")
-            .trigger(availableNow=True)
-            .start()
+        # one fused join per micro-batch (cross ∪ batch-self pairs,
+        # value-identical — VERDICT r14 task 4) instead of separate
+        # cross and self joins over the same prep
+        seen = (
+            existing.select("id")
+            .withColumn("__isb", F.lit(0))
+            .unionByName(nodes.select("id").withColumn("__isb", F.lit(1)))
         )
+        seen_p = prepped.join(seen, "id")
+        edges = jaccard_incident_pairs_prepped(
+            batch_p, seen_p, "__isb", **kw
+        ).select("id_a", "id_b")
+        return incremental_clusters(existing, edges, nodes)
 
-    state = run_file_stream(
+    state = replay_state_fold(
         spark,
         lambda src: stage_microbatches(
             [
@@ -17013,9 +16830,8 @@ def q_streaming_cluster_maintain(spark: SparkSession, sf_dir: str) -> DataFrame:
             ],
             src,
         ),
-        start,
-        lambda tmp: spark.read.parquet(f"{tmp}/state"),
-        prefix="stream_clmaint_",
+        merge_batch,
+        lambda state: state,
         label="streaming_cluster_maintain",
     )
     prepped.unpersist()

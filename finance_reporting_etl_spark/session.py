@@ -13,7 +13,11 @@ replace hand-tuned shuffle partition counts, and
 
 from __future__ import annotations
 
+import atexit
+import glob
 import os
+import shutil
+from urllib.parse import urlparse
 
 from pyspark.sql import SparkSession
 
@@ -87,3 +91,33 @@ def get_spark(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def isolate_run(tag: str) -> None:
+    """Isolate a runner process from concurrent ones (gate, bench,
+    sweep, pytest): unless ``SPARK_GRAFT_RUN_ID`` is already set, set it
+    to ``{tag}-{pid}``, so this process's oracle_aux intermediates and
+    bucketed ``bkt_*`` tables do not race another run's overwrites.
+    At exit, the aux dir (when this call chose the id) and the run's
+    ``bkt_*_{run}`` tables under the session's
+    ``spark.sql.warehouse.dir`` are removed.
+
+    Call before ``queries`` is imported: the aux root is fixed at
+    import."""
+    owned = "SPARK_GRAFT_RUN_ID" not in os.environ
+    os.environ.setdefault("SPARK_GRAFT_RUN_ID", f"{tag}-{os.getpid()}")
+    atexit.register(_remove_run_dirs, owned)
+
+
+def _remove_run_dirs(owned: bool) -> None:
+    if owned:
+        from finance_reporting_etl_spark.oracles import _AUX_DIR
+
+        shutil.rmtree(_AUX_DIR, ignore_errors=True)
+    spark = SparkSession.getActiveSession()
+    if spark is None:
+        return
+    warehouse = urlparse(spark.conf.get("spark.sql.warehouse.dir")).path
+    run = os.environ["SPARK_GRAFT_RUN_ID"].replace("-", "_")
+    for d in glob.glob(f"{warehouse}/bkt_*_{run}"):
+        shutil.rmtree(d, ignore_errors=True)

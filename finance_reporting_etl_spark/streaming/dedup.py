@@ -18,6 +18,8 @@ from __future__ import annotations
 from pyspark.sql import SparkSession
 from pyspark.sql import types as T
 
+from finance_reporting_etl_spark.streaming.staging import start_available_now
+
 
 def streaming_dedup(
     spark: SparkSession,
@@ -42,11 +44,9 @@ def streaming_dedup(
     deduped = stream.withWatermark(ts_col, watermark).dropDuplicatesWithinWatermark(
         list(id_cols)
     )
-    return (
+    return start_available_now(
         deduped.writeStream.format("memory")
         .queryName(output_table)
-        .outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+        .outputMode("append"),
+        checkpoint_dir,
     )

@@ -34,6 +34,13 @@ from pyspark.sql import functions as F
 from finance_reporting_etl_spark.functions.scalars import det_round
 from pyspark.sql import types as T
 
+from finance_reporting_etl_spark.streaming.staging import (
+    file_stream,
+    run_file_stream,
+    stage_chronological_streams,
+    start_available_now,
+)
+
 
 def interval_join_plan(
     left: DataFrame,
@@ -74,7 +81,6 @@ def streaming_interval_join_to_files(
     right_ts: str = "purchase_ts",
     max_delay: str = "1 DAY",
     watermark: str = "2 days",
-    max_files_per_trigger: int | None = 1,
     how: str = "inner",
 ):
     """AvailableNow stream-stream join (``how``: inner / leftOuter),
@@ -82,50 +88,36 @@ def streaming_interval_join_to_files(
     watermark; see the module docstring for per-join-type emission
     semantics."""
 
-    def rd(d: str):
-        r = spark.readStream.schema(schema)
-        if max_files_per_trigger is not None:
-            r = r.option("maxFilesPerTrigger", str(max_files_per_trigger))
-        return r.parquet(d)
-
-    lt = rd(left_dir).withColumnRenamed("ts", left_ts).withWatermark(left_ts, watermark)
-    rt = rd(right_dir).withColumnRenamed("ts", right_ts).withWatermark(right_ts, watermark)
+    lt = file_stream(spark, left_dir, schema).withColumnRenamed("ts", left_ts)
+    rt = file_stream(spark, right_dir, schema).withColumnRenamed("ts", right_ts)
+    lt = lt.withWatermark(left_ts, watermark)
+    rt = rt.withWatermark(right_ts, watermark)
     joined = interval_join_plan(lt, rt, key, left_ts, right_ts, max_delay, how)
-    return (
+    return start_available_now(
         joined.writeStream.format("parquet")
         .option("path", output_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
+        .outputMode("append"),
+        checkpoint_dir,
     )
 
 
 def replay_interval_join(spark, events, how: str):
     """Stage the events frame as chronological view/purchase streams
-    (see ``staging.stage_chronological_streams``) and run the
-    stream-stream interval join replay through the shared
-    ``staging.run_file_stream`` lifecycle (one copy of the
-    tempdir/await/snapshot plumbing — r5 review)."""
-    from finance_reporting_etl_spark.streaming.staging import (
-        run_file_stream,
-        stage_chronological_streams,
-    )
-
+    (see ``staging.stage_chronological_streams``) and replay the
+    stream-stream interval join through ``staging.run_file_stream``."""
     return run_file_stream(
         spark,
-        lambda src: stage_chronological_streams(events, base_dir=src),
-        lambda src, schema, tmp: streaming_interval_join_to_files(
+        lambda src: stage_chronological_streams(events, src),
+        lambda src, _schema, ckpt, sink: streaming_interval_join_to_files(
             spark,
             f"{src}/views",
             f"{src}/purchases",
             spark.read.parquet(f"{src}/views").schema,
-            checkpoint_dir=f"{tmp}/ckpt",
-            output_dir=f"{tmp}/out",
+            checkpoint_dir=ckpt,
+            output_dir=sink,
             how=how,
         ),
-        lambda tmp: spark.read.parquet(f"{tmp}/out"),
-        prefix="stream_join_",
+        lambda sink: spark.read.parquet(sink),
         label=f"streaming {how} interval join",
         infer_schema=False,  # src holds views/ + purchases/ subdirs
     )
@@ -144,7 +136,6 @@ def streaming_static_dim_rollup(
     attr_alias: str = "segment",
     group_col: str = "event_type",
     value_col: str = "value",
-    max_files_per_trigger: int = 1,
 ):
     """Stream-static enrich-then-aggregate: each micro-batch broadcast-
     joins the static dimension (re-planned per batch, no stream-stream
@@ -152,13 +143,7 @@ def streaming_static_dim_rollup(
     complete-mode memory sink. The standard layout for slowly-changing
     dims at scale — keep the dim a table, reserve stateful joins for
     two genuinely unbounded sides."""
-    from pyspark.sql import functions as F
-
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", str(max_files_per_trigger))
-        .parquet(source_dir)
-    )
+    stream = file_stream(spark, source_dir, schema)
     agg = (
         stream.join(F.broadcast(dim), stream[stream_key] == dim[dim_key])
         .groupBy(F.col(dim_attr).alias(attr_alias), group_col)
@@ -167,11 +152,9 @@ def streaming_static_dim_rollup(
             det_round(F.sum(value_col), 6).alias("total_value"),
         )
     )
-    return (
+    return start_available_now(
         agg.writeStream.format("memory")
         .queryName(output_table)
-        .outputMode("complete")
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+        .outputMode("complete"),
+        checkpoint_dir,
     )

@@ -1,10 +1,9 @@
-"""Streaming incremental upsert via ``foreachBatch`` (§2.8 x O5).
+"""Streaming incremental upsert as a state fold (§2.8 x O5).
 
-``foreachBatch`` is the Structured Streaming escape hatch for sinks
-Spark has no native connector for — each micro-batch arrives as a plain
-DataFrame and arbitrary batch logic runs against it. Here that logic is
-the engine's own ``merge_latest`` upsert, turning an event stream into
-a continuously-maintained latest-row-per-key table.
+Each micro-batch of an event stream is upserted into a maintained
+latest-row-per-key table with the engine's own ``merge_latest``
+(``staging.replay_state_fold`` runs the fold; :func:`upsert_latest` is
+its step).
 
 Latest-per-key is an argmin over the total order (order_col DESC,
 tiebreak ASC), which is associative — merging batch-by-batch reaches
@@ -22,175 +21,43 @@ the partitions present in the batch; the streaming plumbing
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import types as T
+from pyspark.sql import DataFrame
 
-from finance_reporting_etl_spark.operators.incremental import merge_latest
+from finance_reporting_etl_spark.operators.incremental import (
+    checked_swap,
+    merge_latest,
+)
 
 
 def overwrite_state_dir(df: DataFrame, path: str) -> None:
     """Replace a maintained parquet state dir with ``df`` when the
-    plan READS the same dir: write to a sibling, then swap via
-    FileSystem rename. One materialization (the direct write) instead
-    of the old localCheckpoint-then-write (which wrote the whole state
-    to executor storage and then re-read it to write parquet — two
-    copies per micro-batch).
+    plan READS the same dir: write ``path__next``, then swap it in with
+    ``checked_swap`` (``path__old`` holds the live dir during the swap).
 
-    The swap renames the live dir ASIDE (never deletes it first) and
-    restores it if the swap-in fails, so no failure mode leaves the
-    state missing; Hadoop ``rename`` signals most failures by
-    returning false, so every return value is checked (ADVICE r14).
-    The two-rename window is still not transactional — the module
-    docstring scopes plain parquet state to the demo harness;
-    production uses MERGE INTO."""
+    The crash policy is ``checked_swap``'s: the live dir is renamed
+    aside, never deleted first, and restored if the swap-in fails. A
+    ``path__old`` without ``path`` means an earlier swap crashed
+    mid-rename and the backup is the only copy, so the call raises
+    ``IOError`` and leaves it in place. The two-rename window is still
+    not transactional — the module docstring scopes plain parquet
+    state to the demo harness; production uses MERGE INTO."""
     sess = df.sparkSession
-    jvm = sess._jvm
-    conf = sess._jsc.hadoopConfiguration()
-    new_path = path + "__next"
-    old_path = path + "__old"
-    df.write.mode("overwrite").parquet(new_path)
-    hp = jvm.org.apache.hadoop.fs.Path(path)
-    hn = jvm.org.apache.hadoop.fs.Path(new_path)
-    ho = jvm.org.apache.hadoop.fs.Path(old_path)
-    fs = hp.getFileSystem(conf)
-    if fs.exists(ho):
-        fs.delete(ho, True)
-    had_prev = fs.exists(hp)
-    if had_prev and not fs.rename(hp, ho):
-        raise IOError(f"rename {path} -> {old_path} failed")
-    if not fs.rename(hn, hp):
-        if had_prev and not fs.rename(ho, hp):
-            raise IOError(
-                f"rename {new_path} -> {path} failed AND restoring "
-                f"{old_path} failed — state dir lost"
-            )
-        raise IOError(f"rename {new_path} -> {path} failed")
-    if had_prev:
-        fs.delete(ho, True)
+    staged = path + "__next"
+    df.write.mode("overwrite").parquet(staged)
+    HPath = sess._jvm.org.apache.hadoop.fs.Path
+    live = HPath(path)
+    fs = live.getFileSystem(sess._jsc.hadoopConfiguration())
+    checked_swap(fs, live, HPath(staged), HPath(path + "__old"))
 
 
-def _read_parquet_if_exists(sess, path: str):
-    """Read a maintained parquet state dir, or None when it does not
-    exist yet. Probes existence through the Hadoop FileSystem first: a
-    bare except around read.parquet would treat ANY transient failure
-    (S3 throttle, corrupt footer, permission blip) as 'first batch'
-    and let the subsequent overwrite destroy all accumulated state
-    (r5 review). Real read errors propagate."""
-    jvm = sess._jvm
-    conf = sess._jsc.hadoopConfiguration()
-    hp = jvm.org.apache.hadoop.fs.Path(path)
-    fs = hp.getFileSystem(conf)
-    if not fs.exists(hp):
-        return None
-    return sess.read.parquet(path)
-
-
-def streaming_merge_upsert(
-    spark: SparkSession,
-    source_dir: str,
-    schema: T.StructType,
-    checkpoint_dir: str,
-    target_dir: str,
+def upsert_latest(
+    state: DataFrame | None,
+    batch: DataFrame,
     keys: list[str],
     order_col: str,
     tiebreak_col: str | None = None,
-    max_files_per_trigger: int = 1,
-    transform=None,
-):
-    """AvailableNow file stream -> foreachBatch merge_latest upsert into
-    ``target_dir``. Returns the StreamingQuery; caller awaits
-    termination then reads the target parquet.
-
-    ``transform`` (optional, batch DataFrame -> DataFrame) runs on each
-    arriving micro-batch BEFORE the merge — the hook for maintaining a
-    DERIVED state (e.g. quantizing arriving vectors to IVF cells) so
-    only new rows ever pay the derivation; the persisted state holds
-    the transformed schema, old rows are never re-derived."""
-
-    def merge_batch(batch_df: DataFrame, batch_id: int) -> None:
-        sess = batch_df.sparkSession
-        if transform is not None:
-            batch_df = transform(batch_df)
-        existing = _read_parquet_if_exists(sess, target_dir)
-        combined = (
-            batch_df if existing is None else existing.unionByName(batch_df)
-        )
-        merged = merge_latest(combined, keys, order_col, tiebreak_col)
-        # write-then-swap: one materialization per batch (the old
-        # localCheckpoint-before-overwrite wrote the state twice)
-        overwrite_state_dir(merged, target_dir)
-
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(source_dir)
-    )
-    return (
-        stream.writeStream.foreachBatch(merge_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-
-
-def streaming_cms_maintain(
-    spark: SparkSession,
-    source_dir: str,
-    schema: T.StructType,
-    checkpoint_dir: str,
-    sketch_dir: str,
-    placements: DataFrame,
-    token_expr,
-    max_files_per_trigger: int = 1,
-):
-    """AvailableNow file stream -> foreachBatch cell-wise Count-Min
-    sketch maintenance: each micro-batch's token counts fold into the
-    persisted (d, col, cell_cnt) grid by addition.
-
-    This is the sketch's mergeability doing real work: the maintained
-    state is depth*width rows FOREVER — unlike the upsert demo above,
-    the per-batch rewrite cost is constant, so plain parquet is the
-    honest production shape, not a stand-in. Any batch split reaches
-    the same grid (addition is associative+commutative), which is what
-    the oracle checks: a streamed sketch must equal the one-shot batch
-    sketch over the union.
-
-    ``token_expr`` maps a batch DataFrame to one token per row (col
-    name 'token'); ``placements`` is the (token, d, col) table from
-    ``cms_placements`` (broadcast per batch — vocab x depth rows).
-
-    foreachBatch is at-least-once, so each batch writes its own DELTA
-    to a ``batch_id=...`` partition of ``sketch_dir`` (a retried batch
-    overwrites itself instead of double-counting — the same
-    idempotency fix streaming/drift.py carries); consumers merge with
-    ``groupBy(d, col).sum(cell_cnt)``, which is exactly the sketch's
-    mergeability. The earlier read-add-overwrite fold double-counted
-    replayed batches (r5 review).
-    """
-    from pyspark.sql import functions as F
-
-    from finance_reporting_etl_spark.operators.sketches import cms_cell_counts
-
-    def fold_batch(batch_df: DataFrame, batch_id: int) -> None:
-        sess = batch_df.sparkSession
-        tc = (
-            batch_df.select(token_expr.alias("token"))
-            .groupBy("token")
-            .agg(F.count(F.lit(1)).alias("cnt"))
-        )
-        delta = cms_cell_counts(tc, F.broadcast(placements))
-        delta.write.mode("overwrite").parquet(
-            f"{sketch_dir}/batch_id={batch_id}"
-        )
-
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(source_dir)
-    )
-    return (
-        stream.writeStream.foreachBatch(fold_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+) -> DataFrame:
+    """State-fold step: the latest row per key over ``state`` (None
+    before the first batch) and ``batch``."""
+    combined = batch if state is None else state.unionByName(batch)
+    return merge_latest(combined, keys, order_col, tiebreak_col)

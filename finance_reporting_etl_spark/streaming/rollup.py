@@ -14,6 +14,10 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from finance_reporting_etl_spark.functions.scalars import det_round
+from finance_reporting_etl_spark.streaming.staging import (
+    file_stream,
+    start_available_now,
+)
 
 
 def time_bucket_rollup(
@@ -124,13 +128,11 @@ def streaming_rollup(
         spark, source_dir, schema, bucket, ts_col, watermark, group_cols, value_col,
         slide=slide,
     )
-    return (
+    return start_available_now(
         agg.writeStream.format("memory")
         .queryName(output_table)
-        .outputMode("complete")
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+        .outputMode("complete"),
+        checkpoint_dir,
     )
 
 
@@ -174,13 +176,11 @@ def streaming_rollup_to_files(
         value_col,
         max_files_per_trigger=max_files_per_trigger,
     )
-    return (
+    return start_available_now(
         agg.writeStream.format("parquet")
         .option("path", output_dir)
-        .outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+        .outputMode("append"),
+        checkpoint_dir,
     )
 
 
@@ -218,10 +218,9 @@ def streaming_sessionize(
     user_col: str = "user_id",
     value_col: str = "value",
     watermark: str = "90 days",
-    max_files_per_trigger: int = 1,
 ):
     """TRUE streaming session windows: ``session_window`` over a file
-    stream, one file per micro-batch (``maxFilesPerTrigger=1``), so
+    stream, one file per micro-batch (``staging.file_stream``), so
     partial sessions open in one micro-batch and MERGE with events
     arriving in later ones — the cross-batch session-state machinery a
     long-running clickstream job exercises, not a single-batch replay.
@@ -232,13 +231,9 @@ def streaming_sessionize(
     watermark sized to the lateness SLA, where a session is emitted
     exactly once, when the watermark passes its close.
     """
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(source_dir)
-    )
     agg = (
-        stream.withWatermark(ts_col, watermark)
+        file_stream(spark, source_dir, schema)
+        .withWatermark(ts_col, watermark)
         .groupBy(F.session_window(F.col(ts_col), gap).alias("w"), user_col)
         .agg(
             F.count(F.lit(1)).alias("n_events"),
@@ -252,62 +247,36 @@ def streaming_sessionize(
             "total_value",
         )
     )
-    return (
+    return start_available_now(
         agg.writeStream.format("memory")
         .queryName(output_table)
-        .outputMode("complete")
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+        .outputMode("complete"),
+        checkpoint_dir,
     )
 
 
-def streaming_ohlc_maintain(
-    spark: SparkSession,
-    source_dir: str,
-    schema: T.StructType,
-    checkpoint_dir: str,
-    bars_dir: str,
-    max_files_per_trigger: int = 1,
-):
-    """Maintain daily OHLC bars from an event stream: each micro-batch
-    writes its PARTIAL bars — (first event key, open, last event key,
-    close, high, low, n) per (event_type, day) — to a ``batch_id=...``
-    partition of ``bars_dir`` (at-least-once foreachBatch: a retried
-    batch overwrites itself, the same idempotency shape
-    streaming_cms_maintain and streaming/drift.py carry). OHLC is a
-    MERGEABLE aggregate once open/close carry their (ts, event_id)
-    keys, so consumers reduce partials with min_by/max_by + min/max +
-    sum — see ``merge_ohlc_partials``."""
-
-    def fold(batch: DataFrame, batch_id: int) -> None:
-        e = batch.filter(F.col("value").isNotNull()).select(
-            "event_type",
-            F.col("ts").cast("date").alias("day"),
-            "ts",
-            "event_id",
-            F.round(F.col("value") * 100).cast("bigint").alias("cents"),
-        )
-        k = F.struct(F.col("ts"), F.col("event_id"))
-        partial = e.groupBy("event_type", "day").agg(
-            F.min(k).alias("first_k"),
-            F.min_by("cents", k).alias("open_cents"),
-            F.max(k).alias("last_k"),
-            F.max_by("cents", k).alias("close_cents"),
-            F.max("cents").alias("high_cents"),
-            F.min("cents").alias("low_cents"),
-            F.count(F.lit(1)).alias("n_ticks"),
-        )
-        partial.write.mode("overwrite").parquet(f"{bars_dir}/batch_id={batch_id}")
-
-    return (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(source_dir)
-        .writeStream.foreachBatch(fold)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+def ohlc_partials(batch: DataFrame) -> DataFrame:
+    """One micro-batch's PARTIAL daily bars: (first event key, open,
+    last event key, close, high, low, n) per (event_type, day). OHLC
+    is MERGEABLE once open/close carry their (ts, event_id) keys, so
+    :func:`merge_ohlc_partials` reduces the partials of any batch split
+    to the batch bars."""
+    e = batch.filter(F.col("value").isNotNull()).select(
+        "event_type",
+        F.col("ts").cast("date").alias("day"),
+        "ts",
+        "event_id",
+        F.round(F.col("value") * 100).cast("bigint").alias("cents"),
+    )
+    k = F.struct(F.col("ts"), F.col("event_id"))
+    return e.groupBy("event_type", "day").agg(
+        F.min(k).alias("first_k"),
+        F.min_by("cents", k).alias("open_cents"),
+        F.max(k).alias("last_k"),
+        F.max_by("cents", k).alias("close_cents"),
+        F.max("cents").alias("high_cents"),
+        F.min("cents").alias("low_cents"),
+        F.count(F.lit(1)).alias("n_ticks"),
     )
 
 
@@ -322,38 +291,4 @@ def merge_ohlc_partials(partials: DataFrame) -> DataFrame:
         F.min("low_cents").alias("low_cents"),
         F.max_by("close_cents", "last_k").alias("close_cents"),
         F.sum("n_ticks").alias("n_ticks"),
-    )
-
-
-def streaming_grouped_sum_fold(
-    spark,
-    source_dir: str,
-    schema,
-    checkpoint_dir: str,
-    sink_dir: str,
-    batch_agg,
-    max_files_per_trigger: int = 1,
-):
-    """Start an AvailableNow stream folding each micro-batch through
-    ``batch_agg`` (a callable batch_df -> per-group ADDITIVE partial
-    sums) into a batch_id-partitioned parquet sink — the generic form
-    of streaming_bin_count_fold for any mergeable integer rollup
-    (ledger postings, leg counts, token tallies). The reader merges
-    partials with ONE groupBy-sum; because the partials are exact
-    integers, the merged result is bit-identical to the one-shot batch
-    aggregation regardless of micro-batch boundaries."""
-
-    def fold(batch, batch_id):
-        batch_agg(batch).write.mode("overwrite").parquet(
-            f"{sink_dir}/batch_id={batch_id}"
-        )
-
-    return (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", str(max_files_per_trigger))
-        .parquet(source_dir)
-        .writeStream.foreachBatch(fold)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
     )

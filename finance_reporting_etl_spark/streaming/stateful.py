@@ -8,8 +8,8 @@ running totals once per key per batch, tagged with an update sequence
 number. Because count/sum are commutative, the *last* emission per key
 equals the batch ``groupBy`` — which is exactly what the oracle checks —
 while the emission log itself demonstrates the cross-batch state
-machinery (``maxFilesPerTrigger=1`` forces several micro-batches even in
-an AvailableNow replay).
+machinery (one file per micro-batch forces several micro-batches even
+in an AvailableNow replay).
 
 Scale notes: state lives in the executor-side state store keyed by the
 grouping column — per-key bytes are a 3-tuple, so state size is bounded
@@ -30,6 +30,10 @@ from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from finance_reporting_etl_spark.functions.scalars import det_round_py
+from finance_reporting_etl_spark.streaming.staging import (
+    file_stream,
+    start_available_now,
+)
 
 STATE_SCHEMA = "n BIGINT, total DOUBLE, seq INT"
 
@@ -133,7 +137,6 @@ def stateful_session_timeout(
     value_col: str = "value",
     gap: str = "30 minutes",
     watermark: str = "10 minutes",
-    max_files_per_trigger: int = 1,
 ):
     """Gap sessionization as a CUSTOM stateful operator with
     ``GroupStateTimeout.EventTimeTimeout`` — the session-close-on-
@@ -153,11 +156,7 @@ def stateful_session_timeout(
         f"{key_col} {key_type}, session_start TIMESTAMP, session_end TIMESTAMP, "
         "n_events BIGINT, total_value DOUBLE"
     )
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(source_dir)
-    )
+    stream = file_stream(spark, source_dir, schema)
     sessions = (
         stream.withWatermark(ts_col, watermark)
         .groupBy(key_col)
@@ -169,13 +168,11 @@ def stateful_session_timeout(
             timeoutConf=GroupStateTimeout.EventTimeTimeout,
         )
     )
-    return (
+    return start_available_now(
         sessions.writeStream.format("memory")
         .queryName(output_table)
-        .outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+        .outputMode("append"),
+        checkpoint_dir,
     )
 
 
@@ -187,7 +184,6 @@ def stateful_running_totals(
     output_table: str = "stateful_totals_stream",
     key_col: str = "user_id",
     value_col: str = "value",
-    max_files_per_trigger: int = 1,
 ):
     """AvailableNow file stream -> per-key GroupState running totals.
 
@@ -203,11 +199,7 @@ def stateful_running_totals(
     out_schema = (
         f"{key_col} {key_type}, upd_seq INT, n_events BIGINT, total_value DOUBLE"
     )
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(source_dir)
-    )
+    stream = file_stream(spark, source_dir, schema)
     updated = stream.groupBy(key_col).applyInPandasWithState(
         _make_updater(value_col, key_col),
         outputStructType=out_schema,
@@ -215,11 +207,9 @@ def stateful_running_totals(
         outputMode="update",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
-    return (
+    return start_available_now(
         updated.writeStream.format("memory")
         .queryName(output_table)
-        .outputMode("update")
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+        .outputMode("update"),
+        checkpoint_dir,
     )

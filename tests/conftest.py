@@ -9,10 +9,12 @@ import pytest
 REPO = Path(__file__).resolve().parent.parent
 sys.path.insert(0, str(REPO))
 
-# Isolate this pytest run's oracle_aux tables from any concurrently
-# running gate/bench process (queries.py bakes the id at import, which
-# happens after this conftest loads).
-os.environ.setdefault("SPARK_GRAFT_RUN_ID", f"pytest-{os.getpid()}")
+# Isolate this pytest run's oracle_aux and bucketed tables from any
+# concurrently running gate/bench process (queries.py bakes the id at
+# import, which happens after this conftest loads).
+from finance_reporting_etl_spark.session import isolate_run  # noqa: E402
+
+isolate_run("pytest")
 
 # Derandomize Hypothesis so the suite is deterministic on ANY box: the
 # r14 driver run drew a twap rounding-tie example the builder's three
@@ -23,24 +25,6 @@ from hypothesis import settings as _hyp_settings  # noqa: E402
 
 _hyp_settings.register_profile("deterministic", derandomize=True)
 _hyp_settings.load_profile("deterministic")
-
-
-@pytest.fixture(scope="session", autouse=True)
-def _cleanup_aux():
-    yield
-    import glob
-    import shutil
-
-    from finance_reporting_etl_spark.queries import _AUX_DIR
-
-    if "pytest-" in _AUX_DIR:
-        shutil.rmtree(_AUX_DIR, ignore_errors=True)
-    # this run's bucketed warehouse tables (bkt_*_pytest_<pid>) — the
-    # per-run name suffix that prevents cross-driver races would
-    # otherwise accumulate one orders+lineitem copy per CI run
-    run = os.environ["SPARK_GRAFT_RUN_ID"].replace("-", "_")
-    for d in glob.glob(str(REPO / "spark-warehouse" / f"bkt_*_{run}")):
-        shutil.rmtree(d, ignore_errors=True)
 
 SF_SMOKE = "/root/testdata/sf0.001"
 SF_ORACLE = "/root/testdata/sf0.01"

@@ -205,27 +205,41 @@ def test_streaming_dedup_drops_replayed_duplicates(spark, sf_dir, tmp_path):
     assert a == b
 
 
-def test_streaming_merge_upsert_equals_batch_merge(spark, sf_dir, tmp_path):
+def test_streaming_merge_upsert_equals_batch_merge(spark, sf_dir):
     from finance_reporting_etl_spark.operators.incremental import merge_latest
-    from finance_reporting_etl_spark.streaming.merge import streaming_merge_upsert
+    from finance_reporting_etl_spark.streaming.merge import upsert_latest
+    from finance_reporting_etl_spark.streaming.staging import replay_state_fold
 
     events = _read_parquet(spark, f"{sf_dir}/events.parquet").select(
         "event_id", "ts", "user_id", "event_type", "value"
     )
-    src = str(tmp_path / "merge_src")
-    events.repartition(3).write.parquet(src)
-    q = streaming_merge_upsert(
-        spark, src, spark.read.parquet(src).schema,
-        checkpoint_dir=str(tmp_path / "merge_ckpt"),
-        target_dir=str(tmp_path / "merge_target"),
-        keys=["user_id"], order_col="ts", tiebreak_col="event_id",
+    # replay_state_fold raises TimeoutError when the stream does not drain
+    got = replay_state_fold(
+        spark,
+        lambda src: events.repartition(3).write.parquet(src),
+        lambda state, batch: upsert_latest(
+            state, batch, ["user_id"], "ts", "event_id"
+        ),
+        lambda state: state,
+        label="merge upsert test",
     )
-    assert q.awaitTermination(120), "merge stream did not finish in time"
-    got = spark.read.parquet(str(tmp_path / "merge_target"))
     want = merge_latest(events, ["user_id"], "ts", "event_id")
     assert got.count() == want.count()
     assert got.exceptAll(want).count() == 0
     assert want.exceptAll(got).count() == 0
+
+
+def test_overwrite_state_dir_keeps_orphan_backup(spark, tmp_path):
+    """Crash window: a swap that died after renaming the live state
+    aside leaves ``path__old`` as the only copy. The next overwrite
+    must refuse and keep it, not delete it."""
+    from finance_reporting_etl_spark.streaming.merge import overwrite_state_dir
+
+    path = str(tmp_path / "state")
+    spark.range(3).write.parquet(path + "__old")
+    with pytest.raises(IOError):
+        overwrite_state_dir(spark.range(5), path)
+    assert spark.read.parquet(path + "__old").count() == 3
 
 
 def test_streaming_restart_resumes_exactly_once(spark, sf_dir, tmp_path):

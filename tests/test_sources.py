@@ -35,6 +35,13 @@ def test_fred_flatten(spark, tmp_path):
     assert rows["2023-01-01"]["value"] == 26500.0
     assert rows["2023-04-01"]["value"] is None  # '.' placeholder -> NULL (A3)
     assert rows["2023-04-01"]["value_raw"] == "."
+    # JSON file sink (S4): write -> read round trip keeps every row
+    out = str(tmp_path / "gdp_out")
+    json_source.write_json(df, out)
+    back = json_source.read_json(spark, out, multiline=False).collect()
+    assert {(r["observation_date"], r["value_raw"], r["value"]) for r in back} == {
+        (d, r["value_raw"], r["value"]) for d, r in rows.items()
+    }
 
 
 def test_annual_reports_flatten(spark, tmp_path):

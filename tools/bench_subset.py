@@ -12,23 +12,11 @@ import sys
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-os.environ.setdefault("SPARK_GRAFT_RUN_ID", f"bsub-{os.getpid()}")
+from finance_reporting_etl_spark.session import get_spark, isolate_run  # noqa: E402
 
-import atexit  # noqa: E402
-import glob as _glob  # noqa: E402
-import shutil as _shutil  # noqa: E402
+isolate_run("bsub")
 
-from finance_reporting_etl_spark.queries import CATALOG, _AUX_DIR  # noqa: E402
-from finance_reporting_etl_spark.session import get_spark  # noqa: E402
-
-
-@atexit.register
-def _cleanup_aux() -> None:
-    if "bsub-" in _AUX_DIR:
-        _shutil.rmtree(_AUX_DIR, ignore_errors=True)
-    run = os.environ["SPARK_GRAFT_RUN_ID"].replace("-", "_")
-    for d in _glob.glob(f"/root/repo/spark-warehouse/bkt_*_{run}"):
-        _shutil.rmtree(d, ignore_errors=True)
+from finance_reporting_etl_spark.queries import CATALOG  # noqa: E402
 
 
 def main() -> None:

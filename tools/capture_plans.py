@@ -9,10 +9,11 @@ import os
 import sys
 
 sys.path.insert(0, "/root/repo")
-os.environ.setdefault("SPARK_GRAFT_RUN_ID", f"plans-{os.getpid()}")
+from finance_reporting_etl_spark.session import get_spark, isolate_run  # noqa: E402
+
+isolate_run("plans")
 
 from finance_reporting_etl_spark.queries import CATALOG  # noqa: E402
-from finance_reporting_etl_spark.session import get_spark  # noqa: E402
 
 
 def main() -> None:

@@ -15,25 +15,11 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-# Isolate from concurrent runners (VERDICT r13 task 4) — queries write
-# shared oracle_aux intermediates at build time. Cleaned up atexit.
-os.environ.setdefault("SPARK_GRAFT_RUN_ID", f"drift-{os.getpid()}")
+from finance_reporting_etl_spark.session import get_spark, isolate_run
 
-import atexit
-import glob
-import shutil
+isolate_run("drift")
 
-from finance_reporting_etl_spark.queries import CATALOG, _AUX_DIR
-from finance_reporting_etl_spark.session import get_spark
-
-
-@atexit.register
-def _cleanup_aux() -> None:
-    if "drift-" in _AUX_DIR:
-        shutil.rmtree(_AUX_DIR, ignore_errors=True)
-    run = os.environ["SPARK_GRAFT_RUN_ID"].replace("-", "_")
-    for d in glob.glob("/root/repo/spark-warehouse/bkt_*_" + run):
-        shutil.rmtree(d, ignore_errors=True)
+from finance_reporting_etl_spark.queries import CATALOG  # noqa: E402
 
 SF = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 ROUNDS = int(os.environ.get("SPARK_GRAFT_DRIFT_ROUNDS", "3"))

@@ -13,29 +13,14 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-# Isolate this sweep's oracle_aux / bucketed tables from concurrent
-# gate/bench/pytest processes (VERDICT r13 task 4; the r13 freeze sweep
-# recorded one false 401/402 from exactly this race). Cleaned up atexit.
-os.environ.setdefault("SPARK_GRAFT_RUN_ID", f"sweep-{os.getpid()}")
-
-import atexit
-import glob
-import shutil
-
 import duckdb
 
-from finance_reporting_etl_spark.queries import CATALOG, _AUX_DIR
-from finance_reporting_etl_spark.session import get_spark
-from tests.oracle_util import assert_matches_oracle
+from finance_reporting_etl_spark.session import get_spark, isolate_run
 
+isolate_run("sweep")
 
-@atexit.register
-def _cleanup_aux() -> None:
-    if "sweep-" in _AUX_DIR:
-        shutil.rmtree(_AUX_DIR, ignore_errors=True)
-    run = os.environ["SPARK_GRAFT_RUN_ID"].replace("-", "_")
-    for d in glob.glob("/root/repo/spark-warehouse/bkt_*_" + run):
-        shutil.rmtree(d, ignore_errors=True)
+from finance_reporting_etl_spark.queries import CATALOG  # noqa: E402
+from tests.oracle_util import assert_matches_oracle  # noqa: E402
 
 SF = os.environ.get("SPARK_GRAFT_SWEEP_SF", "/root/testdata/sf0.1")
 
