@@ -20,6 +20,7 @@ pair table) are written once by the Spark side and read by BOTH engines
 so every downstream decision is re-derived from bit-identical inputs.
 """
 
+# The aux root sits under the checkout holding this package.
 # SPARK_GRAFT_RUN_ID isolates concurrent runs (e.g. gate and bench in
 # parallel): both the writer and the f-string oracle SQL bake the same
 # per-process value at import, so Spark and DuckDB always read one
@@ -27,7 +28,7 @@ so every downstream decision is re-derived from bit-identical inputs.
 # processes.
 import os as _os  # noqa: E402
 
-_AUX_DIR = "/root/repo/spark-warehouse/oracle_aux" + (
+_AUX_DIR = _os.path.abspath(_os.path.join(__file__, "../../spark-warehouse/oracle_aux")) + (
     f"/{_os.environ['SPARK_GRAFT_RUN_ID']}" if _os.environ.get("SPARK_GRAFT_RUN_ID") else ""
 )
 

@@ -11253,33 +11253,40 @@ def q_lang_id_confusion_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_session_gap_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     """WHICH gap defines a session: too short fragments journeys, too
     long merges visits. The census at three thresholds — sessions,
-    single-event sessions, events per session in exact ppm — from the
-    same session_window machinery sessionize_events serves. One
-    session_window aggregation per gap (user-partitioned, the
-    streaming-compatible shape), each reduced to a 1-row census;
-    event totals are gap-invariant, the built-in sanity check."""
-    from finance_reporting_etl_spark.streaming.rollup import sessionize
+    single-event sessions, events per session in exact ppm. Each
+    event's critical value is its gap pair (time since the user's
+    previous event, time to the next), from ONE lag/lead window. At
+    gap g an event starts a session iff the previous gap is absent or
+    >= g, and is a single-event session iff the next gap is too; each
+    g is a conditional sum over a broadcast gap spine. Event totals
+    are gap-invariant, the built-in sanity check."""
+    from pyspark.sql import Window
 
-    ev = _t(spark, sf_dir, "events")
-
-    def one(minutes: int) -> DataFrame:
-        s = sessionize(ev, f"{minutes} minutes")
-        return s.agg(
-            F.lit(minutes).cast("bigint").alias("gap_minutes"),
-            F.count(F.lit(1)).cast("bigint").alias("n_sessions"),
-            F.sum((F.col("n_events") == 1).cast("int"))
+    w = Window.partitionBy("user_id").orderBy("ts")
+    t = F.unix_micros("ts")
+    gaps = _t(spark, sf_dir, "events").select(
+        (t - F.lag(t).over(w)).alias("prev_gap"),
+        (F.lead(t).over(w) - t).alias("next_gap"),
+    )
+    gs = spark.range(1).selectExpr("explode(array(15L, 30L, 60L)) AS gap_minutes")
+    g_us = F.col("gap_minutes") * 60_000_000
+    starts = F.col("prev_gap").isNull() | (F.col("prev_gap") >= g_us)
+    ends = F.col("next_gap").isNull() | (F.col("next_gap") >= g_us)
+    return (
+        gaps.crossJoin(F.broadcast(gs))
+        .groupBy("gap_minutes")
+        .agg(
+            F.sum(starts.cast("int")).cast("bigint").alias("n_sessions"),
+            F.sum((starts & ends).cast("int"))
             .cast("bigint")
             .alias("n_single_event"),
-            F.sum("n_events").cast("bigint").alias("n_events"),
-        ).withColumn(
+            F.count(F.lit(1)).cast("bigint").alias("n_events"),
+        )
+        .withColumn(
             "events_per_session_ppm",
             F.expr("(n_events * 1000000) div n_sessions").cast("bigint"),
         )
-
-    out = one(15)
-    for m in (30, 60):
-        out = out.unionByName(one(m))
-    return out
+    )
 
 
 @query("customer_concentration_topn",
@@ -12038,10 +12045,11 @@ def q_k_anon_generalization_sweep(spark: SparkSession, sf_dir: str) -> DataFrame
     balance, drop nation — the rows k-anonymity suppression (k=5, 25)
     would destroy. Complements k_anonymity_suppress (which applies ONE
     policy) with the curve a privacy engineer reads to PICK the
-    policy. One bounded-domain aggregate per level on the customer
-    dim; both k thresholds come from the same group census. Balance
-    bands floor an exact-cents double division both engines evaluate
-    identically."""
+    policy. The critical value is each group's size: ONE groupingSets
+    pass over the four QI tuples (one customer scan) counts every
+    group, grouping_id() names its level, and both k thresholds are
+    conditional sums over a broadcast k spine. Balance bands floor an
+    exact-cents double division both engines evaluate identically."""
     c = _t(spark, sf_dir, "customer").select(
         F.col("c_mktsegment").alias("seg"),
         F.col("c_nationkey").alias("nat"),
@@ -12060,29 +12068,31 @@ def q_k_anon_generalization_sweep(spark: SparkSession, sf_dir: str) -> DataFrame
         ("L2_seg_nat", ["seg", "nat"]),
         ("L3_seg", ["seg"]),
     ]
-    outs = []
-    for label, qi in levels:
-        g = c.groupBy(*qi).agg(F.count(F.lit(1)).cast("bigint").alias("n"))
-        lv = g.select(F.lit(label).alias("level"), "n").crossJoin(
-            F.broadcast(
-                spark.range(1).selectExpr("stack(2, 5, 25) AS (k)")
-            )
+    # grouping_id() sets bit 3-i for each column i a level leaves out
+    level = " ".join(
+        f"WHEN {sum(1 << (3 - i) for i, x in enumerate(c.columns) if x not in qi)}"
+        f" THEN '{label}'"
+        for label, qi in levels
+    )
+    g = c.groupingSets([qi for _, qi in levels], *c.columns).agg(
+        F.expr(f"CASE grouping_id() {level} END").alias("level"),
+        F.count(F.lit(1)).cast("bigint").alias("n"),
+    )
+    ks = spark.range(1).selectExpr("stack(2, 5L, 25L) AS (k)")
+    return (
+        g.crossJoin(F.broadcast(ks))
+        .groupBy("level", "k")
+        .agg(
+            F.sum("n").cast("bigint").alias("n_rows"),
+            F.count(F.lit(1)).cast("bigint").alias("n_groups"),
+            F.sum(F.when(F.col("n") < F.col("k"), F.col("n")).otherwise(0))
+            .cast("bigint")
+            .alias("suppressed_rows"),
         )
-        outs.append(
-            lv.groupBy("level", F.col("k").cast("bigint").alias("k")).agg(
-                F.sum("n").cast("bigint").alias("n_rows"),
-                F.count(F.lit(1)).cast("bigint").alias("n_groups"),
-                F.sum(F.when(F.col("n") < F.col("k"), F.col("n")).otherwise(0))
-                .cast("bigint")
-                .alias("suppressed_rows"),
-            )
+        .withColumn(
+            "suppressed_ppm",
+            F.expr("(suppressed_rows * 1000000) div n_rows").cast("bigint"),
         )
-    out = outs[0]
-    for o in outs[1:]:
-        out = out.unionByName(o)
-    return out.withColumn(
-        "suppressed_ppm",
-        F.expr("(suppressed_rows * 1000000) div n_rows").cast("bigint"),
     )
 
 
@@ -12252,19 +12262,18 @@ def q_ann_ivf_nprobe_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     measures the whole curve from ONE persisted index — the tuning
     artifact an IVF deployment pins before serving, sibling of
     lsh_band_sweep_recall (banding S-curve). Truth is exact brute
-    force over the 5 fixture queries (1-row count pinned once via
-    localCheckpoint so no union leg re-runs it).
+    force over the 5 fixture queries.
 
     Sweep shape (the semantic_decontamination_recall redesign applied
     at the source): rank-p probes are a PREFIX of rank-8 probes and a
     candidate lives in exactly ONE cell, so each (query, neighbor)
     pair has a single probe_rank — ONE ranked probe table, ONE cell
-    join, ONE cosine pass, and the four sweep points are rank-prefix
-    filters + rank windows over that single scored frame (the
-    4-independent-legs shape re-scored everything per nprobe).
-    Output: 4 rows of exact integers."""
-    from pyspark.sql import Window
-
+    join, ONE cosine pass. The critical values are running probe_rank
+    counts: ONE window per query in (score DESC, neighbor_id ASC)
+    order carries sum(probe_rank <= p) per p — a candidate's rank at
+    nprobe=p, so it is retrieved iff probe_rank <= p and that count is
+    <= 10; a stack turns the counts into the four grid rows. Output:
+    4 rows of exact integers."""
     from finance_reporting_etl_spark.functions.vectors import cosine
     from finance_reporting_etl_spark.operators.similarity import (
         brute_force_topk,
@@ -12275,18 +12284,10 @@ def q_ann_ivf_nprobe_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = _t(spark, sf_dir, "embeddings")
     qids = [0, 1, 2, 3, 4]
     index = _persist_aux(spark, ivf_index(emb), "ivf_sweep_index")
-    # the 50-row truth table feeds the count AND all four per-nprobe
-    # hits joins — pin it once (the old shape re-ran the brute-force
-    # scoring pass per sweep point, 4x)
-    truth = (
-        brute_force_topk(emb, qids, k=10)
-        .select("query_id", "neighbor_id")
-        .localCheckpoint()
+    truth = brute_force_topk(emb, qids, k=10).select(
+        "query_id", "neighbor_id", F.lit(True).alias("in_truth")
     )
-    tn = (
-        truth.agg(F.count(F.lit(1)).cast("bigint").alias("n_truth"))
-        .localCheckpoint()
-    )
+    tn = truth.agg(F.count(F.lit(1)).cast("bigint").alias("n_truth"))
     probes = _persist_aux(
         spark,
         ivf_probes_ranked(emb.filter(F.col("vec_id").isin(qids)), nprobe=8),
@@ -12305,40 +12306,39 @@ def q_ann_ivf_nprobe_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(F.broadcast(qv), "query_id")
         .join(cv, "neighbor_id")
         .withColumn("score", det_round(cosine("q_vec", "c_vec"), 6))
-        .select("query_id", "neighbor_id", "probe_rank", "score")
-        # four rank windows and four candidate counts read this frame —
-        # pin it once so the scoring join chain runs a single time
-        .localCheckpoint()
     )
-    outs = []
-    for p in (1, 2, 4, 8):
-        leg = scored.filter(F.col("probe_rank") <= p)
-        nc = leg.agg(F.count(F.lit(1)).cast("bigint").alias("n_candidates"))
-        w = Window.partitionBy("query_id").orderBy(
-            F.col("score").desc(), F.col("neighbor_id").asc()
+    ps = (1, 2, 4, 8)
+    w = (
+        "OVER (PARTITION BY query_id ORDER BY score DESC, neighbor_id ASC"
+        " ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)"
+    )
+    grid = ", ".join(f"{p}L, rank_{p}" for p in ps)
+    return (
+        scored.join(F.broadcast(truth), ["query_id", "neighbor_id"], "left")
+        .selectExpr(
+            "probe_rank",
+            "in_truth",
+            *[f"sum(CAST(probe_rank <= {p} AS INT)) {w} AS rank_{p}" for p in ps],
         )
-        retrieved = (
-            leg.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= 10)
-            .select("query_id", "neighbor_id")
+        .selectExpr(
+            "probe_rank", "in_truth", f"stack({len(ps)}, {grid}) AS (nprobe, rank)"
         )
-        hits = retrieved.join(truth, ["query_id", "neighbor_id"]).agg(
-            F.count(F.lit(1)).cast("bigint").alias("hits")
+        .filter(F.col("probe_rank") <= F.col("nprobe"))
+        .groupBy("nprobe")
+        .agg(
+            F.count(F.lit(1)).cast("bigint").alias("n_candidates"),
+            F.sum(((F.col("rank") <= 10) & F.col("in_truth").isNotNull()).cast("int"))
+            .cast("bigint")
+            .alias("hits"),
         )
-        outs.append(
-            nc.crossJoin(F.broadcast(hits))
-            .crossJoin(F.broadcast(tn))
-            .selectExpr(
-                f"CAST({p} AS BIGINT) AS nprobe",
-                "n_candidates",
-                "hits",
-                "CAST(hits * 1000000 div n_truth AS BIGINT) AS recall_ppm",
-            )
+        .crossJoin(F.broadcast(tn))
+        .selectExpr(
+            "nprobe",
+            "n_candidates",
+            "hits",
+            "CAST(hits * 1000000 div n_truth AS BIGINT) AS recall_ppm",
         )
-    out = outs[0]
-    for o in outs[1:]:
-        out = out.unionByName(o)
-    return out
+    )
 
 
 @query("oov_rate_by_source",
@@ -14207,17 +14207,20 @@ def q_ohlc_resample_consistency(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query("attribution_window_sweep",
     _ORACLES["attribution_window_sweep"],
-    "J-tier marketing analytics: attribution-window sweep (1h/6h/24h) — attributed purchases, view credits, coverage ppm per window via bucketed range joins; the window knob measured, not argued",
+    "J-tier marketing analytics: attribution-window sweep (1h/6h/24h) — attributed purchases, view credits, coverage ppm per window from one bucketed range join at the widest window; the window knob measured, not argued",
 )
 def q_attribution_window_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     """HOW FAR back to credit: a 1-hour window starves attribution, a
     24-hour window credits everything that moved — this sweep measures
     purchases attributed and view credits at each setting so the knob
-    is chosen on evidence. Per window one bucketed range_join
-    (intervals discretized onto (bucket, user) equi-keys — the
-    attribution_window_join operator, never a nested loop) reduced to
-    a census row; purchases with zero views stay counted via the
-    purchase-total broadcast."""
+    is chosen on evidence. ONE bucketed range_join at the widest
+    window (intervals discretized onto (bucket, user) equi-keys — the
+    attribution_window_join operator, never a nested loop) gives each
+    (view, purchase) hit its critical value, the lag = purchase time
+    - view time in (0, 24h] (the join is half-open, lo <= t < hi).
+    Every window is then a conditional sum lag <= w over a broadcast
+    window spine, per purchase and then per window; purchases with
+    zero views stay counted via the purchase-total broadcast."""
     from finance_reporting_etl_spark.operators.rangejoin import range_join
 
     ev = _t(spark, sf_dir, "events")
@@ -14226,45 +14229,43 @@ def q_attribution_window_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
         "user_id", F.unix_micros("ts").alias("t")
     )
     purchases = ev.filter(F.col("event_type") == "purchase").select(
-        "event_id", "user_id", F.unix_micros("ts").alias("pt")
+        "event_id",
+        "user_id",
+        (F.unix_micros("ts") - 24 * hour_us).alias("lo"),
+        F.unix_micros("ts").alias("hi"),
     )
     np_ = purchases.agg(F.count(F.lit(1)).cast("bigint").alias("n_purchases"))
-    outs = []
-    for wh in (1, 6, 24):
-        iv = purchases.select(
-            "event_id",
-            "user_id",
-            (F.col("pt") - wh * hour_us).alias("lo"),
-            F.col("pt").alias("hi"),
+    lags = range_join(
+        views, purchases, "t", "lo", "hi",
+        bucket_width=24 * hour_us, extra_eq=["user_id"],
+    ).select("event_id", (F.col("hi") - F.col("t")).alias("lag"))
+    ws = spark.range(1).selectExpr("explode(array(1L, 6L, 24L)) AS win_hours")
+    per_p = (
+        lags.crossJoin(F.broadcast(ws))
+        .groupBy("win_hours", "event_id")
+        .agg(
+            F.sum((F.col("lag") <= F.col("win_hours") * hour_us).cast("int"))
+            .cast("bigint")
+            .alias("n_views")
         )
-        hits = range_join(
-            views, iv, "t", "lo", "hi",
-            bucket_width=wh * hour_us, extra_eq=["user_id"],
+    )
+    return (
+        per_p.groupBy("win_hours")
+        .agg(
+            F.sum((F.col("n_views") > 0).cast("int"))
+            .cast("bigint")
+            .alias("attributed_purchases"),
+            F.sum("n_views").cast("bigint").alias("total_view_credits"),
         )
-        per_p = hits.groupBy("event_id").agg(
-            F.count(F.lit(1)).cast("bigint").alias("n_views")
+        .crossJoin(F.broadcast(np_))
+        .selectExpr(
+            "win_hours",
+            "n_purchases",
+            "attributed_purchases",
+            "total_view_credits",
+            "CAST(attributed_purchases * 1000000 div n_purchases"
+            " AS BIGINT) AS coverage_ppm",
         )
-        outs.append(
-            per_p.agg(
-                F.count(F.lit(1)).cast("bigint").alias("attributed_purchases"),
-                F.sum("n_views").cast("bigint").alias("total_view_credits"),
-            )
-            .crossJoin(F.broadcast(np_))
-            .selectExpr(
-                f"CAST({wh} AS BIGINT) AS win_hours",
-                "n_purchases",
-                "attributed_purchases",
-                "total_view_credits",
-                "CAST(attributed_purchases * 1000000 div n_purchases"
-                " AS BIGINT) AS coverage_ppm",
-            )
-        )
-    out = outs[0]
-    for o in outs[1:]:
-        out = out.unionByName(o)
-    return out.select(
-        "win_hours", "n_purchases", "attributed_purchases",
-        "total_view_credits", "coverage_ppm",
     )
 
 

@@ -100,6 +100,21 @@ def test_rest_fetch_with_rate_limit():
     assert "INCOME_STATEMENT" in out[0][2]["url"]
     with pytest.raises(RuntimeError):  # 4th call exceeds budget
         limiter.wait()
+    # FRED series GET (fetch_data.py:5-11 URL construction)
+    fred_limiter = rest.RateLimiter(clock=lambda: 0.0, sleep=sleeps.append)
+    payload = rest.fetch_series(
+        lambda url: calls.append(url) or FRED_PAYLOAD,
+        "https://api.example/fred/series/observations",
+        "GDPC1",
+        api_key="k",
+        limiter=fred_limiter,
+    )
+    assert payload is FRED_PAYLOAD
+    assert calls == [
+        "https://api.example/fred/series/observations"
+        "?series_id=GDPC1&api_key=k&file_type=json"
+    ]
+    assert fred_limiter.calls == 1
 
 
 def test_payloads_to_df(spark):

@@ -8,7 +8,7 @@ from __future__ import annotations
 import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from finance_reporting_etl_spark.session import get_spark, isolate_run  # noqa: E402
 
 isolate_run("plans")

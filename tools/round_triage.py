@@ -27,10 +27,11 @@ inside the incoming gate window union _GATE_NEXT.
 
 from __future__ import annotations
 
+import os
 import re
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql.types import DoubleType, FloatType
 
